@@ -42,7 +42,7 @@ SOLO_EXTRA_SLOWEST = 2  # plus the N in-suite slowest not already listed
 
 # Untimed annealing pass before the in-suite timing pass: the first N
 # alphabetical queries run once, untimed.  Round-13 order-flip
-# evidence (tools/suiteorder_attrib.py; ARCHITECTURE §5t): the tiny
+# evidence (ARCHITECTURE §5t): the tiny
 # early-alphabet faces run ~2-3x FASTER at the END of the suite than
 # at their alphabetical position (a11_grouping_sets 0.43 -> 0.14 s,
 # a16 1.10 -> 0.74, 30-face cluster 12.5 -> 8.0 s) — per-query JIT/

@@ -12,6 +12,8 @@ re-expresses that capability Spark-first:
 - ``io``         : Parquet readers/writers, snapshot dirs, testdata loaders
 - ``operators``  : relational query library, upsert/merge semantics,
                    dedup, similarity search, text analysis, multimodal
+- ``runtime``    : checkpoint bookkeeping and the bucketed-parquet layout
+                   the operators share
 - ``etl``        : the reference's ETL dataflow as set-oriented transforms
 - ``streaming``  : Structured Streaming layer over the events table
 - ``queries``    : the declared, oracle-checked query inventory

@@ -196,7 +196,13 @@ def run(spark: SparkSession, args: argparse.Namespace) -> dict[str, int]:
 
     counts: dict[str, int] = {}
     for name, df in tables.items():
-        write_snapshot(df, args.base, name, args.release)
+        # the full load and the incremental merge build some tables in
+        # different column orders; every release is written in the
+        # schema's
+        write_snapshot(
+            df.select(*SCHEMAS[name].fieldNames()),
+            args.base, name, args.release,
+        )
         counts[name] = spark.read.parquet(
             f"{args.base}/{name}/release={args.release}"
         ).count()

@@ -19,6 +19,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from hfcommunity_spark import runtime
 from hfcommunity_spark.io import read_table
 from hfcommunity_spark.registry import query
 from hfcommunity_spark.session_cache import SessionCache
@@ -1869,50 +1870,6 @@ X15_SERVE_LOCAL_ROW_MAX = 600_000
 X17_SERVE_LOCAL_ROW_MAX = 600_000
 
 
-def _x15_local_serve_table(tdir: str, pcol: str, cap: int):
-    """Driver-local serve read of a bucket-partitioned assignment
-    layout: one multithreaded pyarrow dataset scan over the bucket
-    files (the x17 'files as the interface' probe applied to the
-    SERVE side).  Reads the DISK state, which the catalog-partition
-    sync discipline keeps identical to the catalog state the
-    distributed serve reads (parity test-locked with the cap pinned
-    to 0).  Returns an Arrow table or None — gate failure (row cap,
-    unreadable/corrupt/missing files) sends THIS serve to the
-    distributed catalog read; at 100 TB the layout is on object
-    storage, ``listdir`` fails, and every serve is distributed."""
-    import os
-
-    import pyarrow as pa
-    import pyarrow.dataset as pads
-
-    files: list[str] = []
-    try:
-        for d in sorted(os.listdir(tdir)):
-            if not d.startswith(f"{pcol}="):
-                continue
-            dd_ = os.path.join(tdir, d)
-            for fn in sorted(os.listdir(dd_)):
-                if (fn.startswith(("_", "."))
-                        or not fn.endswith(".parquet")):
-                    continue
-                files.append(os.path.join(dd_, fn))
-        if not files:
-            # an assignment layout is never legitimately empty (the
-            # base corpus always has vertices), so a pcol/layout
-            # drift must FALL BACK to the catalog read instead of
-            # silently serving zero rows (ADVICE r13) — matching the
-            # x17 sibling's contract
-            return None
-        t = pads.dataset(files).to_table(
-            columns=["vertex", "component"]
-        )
-        if t.num_rows > cap:
-            return None
-        return t
-    except (OSError, pa.lib.ArrowException):
-        return None
-
-
 @query("x15_stream_maintained_clusters", _x15_oracle(),
        survey="X7,D3,D4,J5,S13,X-UD5")
 def x15_stream_maintained_clusters(spark: SparkSession,
@@ -1928,7 +1885,7 @@ def x15_stream_maintained_clusters(spark: SparkSession,
     are rewritten in place (``apply_relabel_in_place`` /
     ``apply_changes_vertex_layout``) with their partition METADATA
     kept in step through ``ALTER TABLE ADD/DROP PARTITION``
-    (``graph._sync_catalog_partitions``).  The metadata sync is
+    (``runtime.sync_catalog_partitions``).  The metadata sync is
     load-bearing: a delivery's fresh vertices land in previously
     ABSENT v_buckets, so if the writer failed to register them, the
     NEXT delivery's catalog-pruned endpoint lookup would miss those
@@ -1955,8 +1912,6 @@ def x15_stream_maintained_clusters(spark: SparkSession,
         apply_changes_vertex_layout,
         apply_relabel_in_place,
         component_merge_plan_pruned,
-        materialize_and_free,
-        pinned_block_ids,
     )
 
     pristine = _x15_pristine_layouts(spark, sf_dir)
@@ -1976,7 +1931,7 @@ def x15_stream_maintained_clusters(spark: SparkSession,
         pairs.count()
         _X15_PAIRS_FORCED.add(fkey)
     thr = F.col("jaccard") >= JACCARD_CLUSTER_THRESHOLD
-    _blocks_before = pinned_block_ids(spark)
+    _blocks_before = runtime.pinned_block_ids(spark)
 
     def _arrival(col: str) -> F.Column:
         return F.expr(
@@ -1992,10 +1947,7 @@ def x15_stream_maintained_clusters(spark: SparkSession,
     # contract × the delivery count; if it overflows, edges_by_k
     # stays None and each fold falls back to the lazy per-fold filter
     # (the distributed plan's own guard then applies per delivery).
-    from hfcommunity_spark.operators.graph import (
-        QUOTIENT_LOCAL_EDGE_MAX,
-        _local_frame,
-    )
+    from hfcommunity_spark.operators.graph import QUOTIENT_LOCAL_EDGE_MAX
     from pyspark.sql import types as T
 
     edge_cap = X15_DELIVERIES * QUOTIENT_LOCAL_EDGE_MAX + 1
@@ -2031,33 +1983,21 @@ def x15_stream_maintained_clusters(spark: SparkSession,
     cdir = os.path.join(work, "cassign")
     vdir = os.path.join(work, "vassign")
 
-    def _link_or_copy(src: str, dst: str) -> None:
-        # the working copy starts as HARDLINKS to the pristine files:
-        # the fold only ever replaces whole files (dynamic partition
-        # overwrite unlinks + writes fresh), never appends, so the
-        # pristine layout is safe and the copy is O(files) metadata.
-        # Cross-device fallback copies bytes (tmpdir on another fs).
-        try:
-            os.link(src, dst)
-        except OSError:
-            shutil.copy2(src, dst)
-
+    # the working copy starts as HARDLINKS to the pristine files: the
+    # fold only ever replaces whole files, so the pristine layout is
+    # safe and the copy is O(files) metadata
     shutil.copytree(
         os.path.join(pristine, "cassign"), cdir,
-        copy_function=_link_or_copy,
+        copy_function=runtime.link_or_copy,
     )
     shutil.copytree(
         os.path.join(pristine, "vassign"), vdir,
-        copy_function=_link_or_copy,
+        copy_function=runtime.link_or_copy,
     )
     ctab, vtab = f"hfc_x15_c_{run}", f"hfc_x15_v_{run}"
 
     served: list[DataFrame] = []
     try:
-        from hfcommunity_spark.operators.graph import (
-            _sync_catalog_partitions,
-        )
-
         for tname, tdir, pcol in (
             (ctab, cdir, "c_bucket"), (vtab, vdir, "v_bucket"),
         ):
@@ -2069,7 +2009,7 @@ def x15_stream_maintained_clusters(spark: SparkSession,
             # register the pristine partitions in ONE batched ALTER —
             # the directory names are already in hand from the
             # hardlink copy, so MSCK's re-listing job is pure overhead
-            _sync_catalog_partitions(
+            runtime.sync_catalog_partitions(
                 spark, tname, pcol,
                 added=[
                     int(d.split("=", 1)[1])
@@ -2084,7 +2024,7 @@ def x15_stream_maintained_clusters(spark: SparkSession,
         serve_cap = X15_SERVE_LOCAL_ROW_MAX
         for k in range(X15_DELIVERIES):
             if edges_by_k is not None:
-                new_edges = _local_frame(
+                new_edges = runtime.local_frame(
                     spark, edges_by_k.get(k, []), edge_schema
                 )
             else:
@@ -2128,9 +2068,10 @@ def x15_stream_maintained_clusters(spark: SparkSession,
                 # ~0.27 s each measured); a failed gate sends THIS
                 # serve to the catalog read.
                 try:
-                    st = (_x15_local_serve_table(cdir, "c_bucket",
-                                                 serve_cap)
-                          if serve_cap > 0 else None)
+                    st = (runtime.read_layout_table(
+                        cdir, "c_bucket", ("vertex", "component"),
+                        serve_cap,
+                    ) if serve_cap > 0 else None)
                     if st is not None:
                         local_serves.append(st.append_column(
                             "delivery_id",
@@ -2149,7 +2090,8 @@ def x15_stream_maintained_clusters(spark: SparkSession,
                         # union materializes every serve once).
                         snap = os.path.join(work, f"serve{k}")
                         shutil.copytree(
-                            cdir, snap, copy_function=_link_or_copy
+                            cdir, snap,
+                            copy_function=runtime.link_or_copy,
                         )
                         served.append(
                             spark.read.schema(
@@ -2185,7 +2127,7 @@ def x15_stream_maintained_clusters(spark: SparkSession,
         # invocation created (fold plans, change sets, any per-fold
         # serving snapshots): the returned frame reads only its own
         # blocks, repeated invocations pin nothing on top
-        return materialize_and_free(spark, _blocks_before, out)
+        return runtime.materialize_and_free(spark, _blocks_before, out)
     finally:
         # the serving blocks are EAGER checkpoints (block-manager
         # resident), so the catalog entries and working files can go
@@ -2238,103 +2180,18 @@ def write_span_stats(stats: DataFrame, out_dir: str,
     """Materialize the per-doc span stats as the doc-bucketed layout a
     deployment upserts in place: parquet partitioned by
     ``d_bucket = pmod(xxhash64(doc_id), buckets)`` (the
-    ``graph._bucket_expr`` single source of truth, so the driver-local
-    writer's Python twin ``graph._py_bucket`` prunes identically).
+    ``runtime.bucket_expr`` single source of truth, so the driver-local
+    writer's Python twin ``runtime.py_bucket`` prunes identically).
     Repartitioned on the bucket key for one file per bucket
     (:func:`write_span_postings`'s file-count rationale)."""
-    from hfcommunity_spark.operators.graph import _bucket_expr
-
     (
-        stats.withColumn("d_bucket", _bucket_expr("doc_id", buckets))
+        stats.withColumn("d_bucket", runtime.bucket_expr("doc_id", buckets))
         .repartition(F.col("d_bucket"))
         .write.mode("overwrite")
         .partitionBy("d_bucket")
         .parquet(out_dir)
     )
     return out_dir
-
-
-def _span_local_read_buckets(dir_: str, bkts, columns,
-                             cap: int) -> dict[int, list] | None:
-    """Driver-side pruned read of the touched buckets of a span
-    layout (``graph._local_bucket_rows`` generalized to an arbitrary
-    column list).  Returns ``{bucket: [tuple, ...]}`` or None — BEFORE
-    any mutation — on a failed gate (missing layout treated per-bucket
-    as empty; unreadable/corrupt file or > ``cap`` total rows gate the
-    whole fold)."""
-    import os
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    out: dict[int, list] = {}
-    total = 0
-    try:
-        for b in bkts:
-            d = os.path.join(dir_, f"d_bucket={b}")
-            rows: list = []
-            if os.path.isdir(d):
-                for fn in sorted(os.listdir(d)):
-                    if (fn.startswith(("_", "."))
-                            or not fn.endswith(".parquet")):
-                        continue
-                    t = pq.read_table(
-                        os.path.join(d, fn), columns=list(columns)
-                    )
-                    total += t.num_rows
-                    if total > cap:
-                        return None
-                    rows.extend(
-                        zip(*(t.column(c).to_pylist() for c in columns))
-                    )
-            out[b] = rows
-    except (OSError, pa.lib.ArrowException):
-        return None
-    return out
-
-
-def _span_local_write_buckets(dir_: str, pcol: str,
-                              by_bucket: dict[int, list],
-                              fields, append: bool) -> None:
-    """Driver-side bucket writer for the span layouts, staged-commit
-    (``graph._local_bucket_write`` discipline: the new file lands
-    while old files are still present; replace mode unlinks them only
-    after the write succeeds).  ``fields`` is the ordered
-    (name, pyarrow type) schema; ``append=True`` (postings deliveries)
-    never touches existing files."""
-    import os
-    import uuid
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    for b, rows in by_bucket.items():
-        if not rows:
-            # stats buckets never empty out (the fold only adds or
-            # updates rows) and postings appends are built from the
-            # batch — an empty list means nothing to write
-            continue
-        d = os.path.join(dir_, f"{pcol}={b}")
-        old = (
-            [] if append else
-            [fn for fn in os.listdir(d)
-             if not fn.startswith(("_", "."))]
-            if os.path.isdir(d) else []
-        )
-        os.makedirs(d, exist_ok=True)
-        cols = list(zip(*rows))
-        pq.write_table(
-            pa.table({
-                name: pa.array(cols[i], typ)
-                for i, (name, typ) in enumerate(fields)
-            }),
-            os.path.join(
-                d, f"part-00000-{uuid.uuid4().hex}.snappy.parquet"
-            ),
-            compression="snappy",
-        )
-        for fn in old:
-            os.unlink(os.path.join(d, fn))
 
 
 # Byte budget for the driver-local probe's pruned read of the
@@ -2376,12 +2233,7 @@ def _span_probe_local(postings_dir: str, hit, h_want,
     try:
         for b in hit:
             d = os.path.join(postings_dir, f"h_bucket={b}")
-            if not os.path.isdir(d):
-                continue
-            for fn in sorted(os.listdir(d)):
-                if (fn.startswith(("_", "."))
-                        or not fn.endswith(".parquet")):
-                    continue
+            for fn in runtime.bucket_files(d):
                 p = os.path.join(d, fn)
                 total_bytes += os.stat(p).st_size
                 if total_bytes > SPAN_LOCAL_READ_BYTE_MAX:
@@ -2433,16 +2285,6 @@ def _span_fold_check_marker(postings_dir: str) -> None:
         )
 
 
-def _span_bucket_listing(postings_dir: str, b: int) -> list[str]:
-    import os
-
-    d = os.path.join(postings_dir, f"h_bucket={b}")
-    return sorted(
-        fn for fn in (os.listdir(d) if os.path.isdir(d) else [])
-        if not fn.startswith(("_", ".")) and fn.endswith(".parquet")
-    )
-
-
 def _span_fold_write_marker(postings_dir: str,
                             touched_buckets) -> None:
     """Journal the pre-fold state of every h-bucket this fold will
@@ -2457,7 +2299,9 @@ def _span_fold_write_marker(postings_dir: str,
     import os
 
     snapshot = {
-        str(b): _span_bucket_listing(postings_dir, b)
+        str(b): runtime.bucket_files(
+            os.path.join(postings_dir, f"h_bucket={b}")
+        )
         for b in sorted(touched_buckets)
     }
     marker = _span_fold_marker_path(postings_dir)
@@ -2535,15 +2379,8 @@ def recover_span_fold(spark, postings_dir: str, stats_dir: str,
         snapshot = {}
     for b, keep in snapshot.items():
         d = os.path.join(postings_dir, f"h_bucket={b}")
-        if not os.path.isdir(d):
-            continue
-        keep_set = set(keep)
-        for fn in os.listdir(d):
-            if (fn.startswith(("_", "."))
-                    or not fn.endswith(".parquet")):
-                continue
-            if fn not in keep_set:
-                os.unlink(os.path.join(d, fn))
+        for fn in set(runtime.bucket_files(d)) - set(keep):
+            os.unlink(os.path.join(d, fn))
     spark.catalog.refreshByPath(postings_dir)
     rebuilt = span_stats_from_postings(
         spark.read.parquet(postings_dir).select("doc_id", "h", "c")
@@ -2631,8 +2468,6 @@ def _span_fold_local_rows(spark, postings_dir: str, stats_dir: str,
     import pyarrow as pa
     import pyarrow.compute as pc
 
-    from hfcommunity_spark.operators import graph as G
-
     cap = SPAN_LOCAL_ROW_MAX
     if not (os.path.isdir(postings_dir) and os.path.isdir(stats_dir)):
         return False
@@ -2694,9 +2529,10 @@ def _span_fold_local_rows(spark, postings_dir: str, stats_dir: str,
     # pruned read of the touched stats buckets — the LAST gate, still
     # before any mutation
     touched = set(batch_stats) | set(inc)
-    sbkts = sorted({G._py_bucket(d, stats_buckets) for d in touched})
-    data = _span_local_read_buckets(
-        stats_dir, sbkts, ("doc_id", "n_spans", "n_dup_spans"), cap
+    sbkts = sorted({runtime.py_bucket(d, stats_buckets) for d in touched})
+    data = runtime.read_bucket_rows(
+        stats_dir, "d_bucket", sbkts,
+        ("doc_id", "n_spans", "n_dup_spans"), cap,
     )
     if data is None:
         return False
@@ -2714,7 +2550,7 @@ def _span_fold_local_rows(spark, postings_dir: str, stats_dir: str,
         stats_out[b] = out
     for d, (ns, nd) in batch_stats.items():
         stats_out.setdefault(
-            G._py_bucket(d, stats_buckets), []
+            runtime.py_bucket(d, stats_buckets), []
         ).append((d, ns, nd))
     # gates all passed — mutate: stats buckets rewritten (staged
     # commit), batch postings appended one new file per h-bucket.
@@ -2732,12 +2568,12 @@ def _span_fold_local_rows(spark, postings_dir: str, stats_dir: str,
     for d, h, c in batch_rows:
         post_out.setdefault(h % buckets, []).append((d, h, c))
     _span_fold_write_marker(postings_dir, post_out)
-    _span_local_write_buckets(
+    runtime.write_bucket_files(
         stats_dir, "d_bucket", stats_out,
         (("doc_id", i64), ("n_spans", i64), ("n_dup_spans", i64)),
         append=False,
     )
-    _span_local_write_buckets(
+    runtime.write_bucket_files(
         postings_dir, "h_bucket", post_out,
         (("doc_id", i64), ("h", i64), ("c", i64)),
         append=True,
@@ -2766,7 +2602,7 @@ def _span_fold_distributed(spark, postings_dir: str, stats_dir: str,
        population the old shape broadcast twice (``changed.doc_id``
        anti-join build + the inc rows), so driver boundedness is
        unchanged in class; what disappears is the ``pre`` checkpoint,
-       the ``changed`` checkpoint, and the ``_bucket_ids`` collect —
+       the ``changed`` checkpoint, and the ``bucket_ids`` collect —
        three fixed-cost jobs per delivery.
     4. the stats upsert as ONE job: carried rows read from a HARDLINK
        SNAPSHOT of the touched d_buckets (same inodes, different
@@ -2788,12 +2624,6 @@ def _span_fold_distributed(spark, postings_dir: str, stats_dir: str,
     import tempfile as _tempfile
 
     import pyarrow as pa
-
-    from hfcommunity_spark.operators.graph import (
-        _bucket_expr,
-        _py_bucket,
-        _write_tasks,
-    )
 
     # LAZY checkpoint (r15): the probe gate's distinct-h collect runs
     # a map stage over EVERY batch partition (the limit only
@@ -2852,7 +2682,7 @@ def _span_fold_distributed(spark, postings_dir: str, stats_dir: str,
         "inc": pa.array(
             [v for v, n in zip(inc, new_mask) if not n], pa.int64()),
     }))
-    sbkts = sorted({_py_bucket(d, stats_buckets) for d in ids})
+    sbkts = sorted({runtime.py_bucket(d, stats_buckets) for d in ids})
 
     snapshot = None
     rows = None
@@ -2863,19 +2693,12 @@ def _span_fold_distributed(spark, postings_dir: str, stats_dir: str,
             # replaces the originals — same inodes, so no checkpoint
             # is needed to cut lineage from the files being replaced
             snapshot = _tempfile.mkdtemp(prefix="hfc_spanstats_snap_")
-
-            def _link_or_copy(src: str, dst: str) -> None:
-                try:
-                    _os.link(src, dst)
-                except OSError:
-                    _shutil.copy2(src, dst)
-
             for b in sbkts:
                 d = _os.path.join(stats_dir, f"d_bucket={b}")
                 if _os.path.isdir(d):
                     _shutil.copytree(
                         d, _os.path.join(snapshot, f"d_bucket={b}"),
-                        copy_function=_link_or_copy,
+                        copy_function=runtime.link_or_copy,
                     )
             pruned = spark.read.schema(
                 _SPAN_STATS_READ_SCHEMA
@@ -2900,7 +2723,9 @@ def _span_fold_distributed(spark, postings_dir: str, stats_dir: str,
                 ).alias("n_dup_spans"),
             )
             .unionByName(batch_rel)
-            .withColumn("d_bucket", _bucket_expr("doc_id", stats_buckets))
+            .withColumn(
+                "d_bucket", runtime.bucket_expr("doc_id", stats_buckets)
+            )
         )
         if snapshot is None:
             # non-local layout: no snapshot names to read through —
@@ -2937,7 +2762,7 @@ def _span_fold_distributed(spark, postings_dir: str, stats_dir: str,
                 return
             (
                 rows.repartition(
-                    _write_tasks(len(sbkts)), F.col("d_bucket")
+                    runtime.write_tasks(len(sbkts)), F.col("d_bucket")
                 )
                 .write.mode("overwrite")
                 .partitionBy("d_bucket")
@@ -3067,34 +2892,23 @@ def dd_span_fold_in_place_parity(spark: SparkSession,
     import tempfile
     import uuid
 
-    from hfcommunity_spark.operators.graph import (
-        materialize_and_free,
-        pinned_block_ids,
-    )
     from hfcommunity_spark.session import default_parallelism
 
     pristine = _x17_pristine_layouts(spark, sf_dir)
     arriving = _delta_arriving_docs(spark, sf_dir)
-    before = pinned_block_ids(spark)
+    before = runtime.pinned_block_ids(spark)
     work = tempfile.mkdtemp(
         prefix=f"hfc_spanfold_{uuid.uuid4().hex[:12]}_"
     )
     pdir = os.path.join(work, "postings")
     sdir = os.path.join(work, "stats")
-
-    def _link_or_copy(src: str, dst: str) -> None:
-        try:
-            os.link(src, dst)
-        except OSError:
-            shutil.copy2(src, dst)
-
     shutil.copytree(
         os.path.join(pristine, "postings"), pdir,
-        copy_function=_link_or_copy,
+        copy_function=runtime.link_or_copy,
     )
     shutil.copytree(
         os.path.join(pristine, "stats"), sdir,
-        copy_function=_link_or_copy,
+        copy_function=runtime.link_or_copy,
     )
     try:
         span_fold_in_place(spark, pdir, sdir, arriving)
@@ -3106,7 +2920,7 @@ def dd_span_fold_in_place_parity(spark: SparkSession,
                 F.col("n_dup_spans").cast("double") / F.col("n_spans")
             ).alias("dup_ratio"),
         ).coalesce(default_parallelism())
-        return materialize_and_free(spark, before, out)
+        return runtime.materialize_and_free(spark, before, out)
     finally:
         shutil.rmtree(work, ignore_errors=True)
 
@@ -3125,47 +2939,6 @@ def _x17_oracle() -> str:
     FROM ({dup_span_stats_sql(pred)}) s{k}"""
         )
     return "\nUNION ALL\n".join(arms)
-
-
-def _x17_local_serve_table(sdir: str, cap: int):
-    """Driver-local serve read of the d-bucketed stats layout (the
-    round-13 x15 serve pattern): one pyarrow dataset scan over the
-    bucket files, dup_ratio computed as IEEE double division (bit-
-    identical to the JVM's).  Returns an Arrow table or None — gate
-    failure (row cap, unreadable/missing files) sends THIS serve back
-    to the hardlink-snapshot + distributed-read path; on object
-    storage ``listdir`` fails and every serve is distributed."""
-    import os
-
-    import pyarrow as pa
-    import pyarrow.compute as pc
-    import pyarrow.dataset as pads
-
-    files: list[str] = []
-    try:
-        for d in sorted(os.listdir(sdir)):
-            if not d.startswith("d_bucket="):
-                continue
-            dd_ = os.path.join(sdir, d)
-            for fn in sorted(os.listdir(dd_)):
-                if (fn.startswith(("_", "."))
-                        or not fn.endswith(".parquet")):
-                    continue
-                files.append(os.path.join(dd_, fn))
-        if not files:
-            return None  # a stats layout is never legitimately empty
-        t = pads.dataset(files).to_table(
-            columns=["doc_id", "n_spans", "n_dup_spans"]
-        )
-        if t.num_rows > cap:
-            return None
-        ratio = pc.divide(
-            t.column("n_dup_spans").cast(pa.float64()),
-            t.column("n_spans").cast(pa.float64()),
-        )
-        return t.append_column("dup_ratio", ratio)
-    except (OSError, pa.lib.ArrowException):
-        return None
 
 
 @query("x17_stream_maintained_spans", _x17_oracle(),
@@ -3206,37 +2979,23 @@ def x17_stream_maintained_spans(spark: SparkSession,
     import tempfile
     import uuid
 
-    from hfcommunity_spark.operators.graph import (
-        materialize_and_free,
-        pinned_block_ids,
-    )
     from hfcommunity_spark.session import default_parallelism
 
     pristine = _x17_pristine_layouts(spark, sf_dir)
     arriving = _delta_arriving_docs(spark, sf_dir)
-    before = pinned_block_ids(spark)
+    before = runtime.pinned_block_ids(spark)
 
     run = uuid.uuid4().hex[:12]
     work = tempfile.mkdtemp(prefix=f"hfc_x17_work_{run}_")
     pdir = os.path.join(work, "postings")
     sdir = os.path.join(work, "stats")
-
-    def _link_or_copy(src: str, dst: str) -> None:
-        # hardlinks: the fold only ever ADDS files (postings append)
-        # or unlinks-and-replaces whole files (stats staged commit),
-        # never modifies one in place, so the pristine layout is safe
-        try:
-            os.link(src, dst)
-        except OSError:
-            shutil.copy2(src, dst)
-
     shutil.copytree(
         os.path.join(pristine, "postings"), pdir,
-        copy_function=_link_or_copy,
+        copy_function=runtime.link_or_copy,
     )
     shutil.copytree(
         os.path.join(pristine, "stats"), sdir,
-        copy_function=_link_or_copy,
+        copy_function=runtime.link_or_copy,
     )
     width = default_parallelism()
     # ONE whole-stream collect splits every delivery's exploded spans
@@ -3247,8 +3006,6 @@ def x17_stream_maintained_spans(spark: SparkSession,
     # re-gates per delivery.
     import pyarrow as pa
     import pyarrow.compute as pc
-
-    from hfcommunity_spark.operators import graph as G
 
     cap = SPAN_LOCAL_ROW_MAX
     spans_by_k = None
@@ -3302,16 +3059,28 @@ def x17_stream_maintained_spans(spark: SparkSession,
             # gate falls back to the hardlink snapshot (~ms; the
             # staged-commit writers replace whole files, so linked
             # snapshots keep the old inodes) + distributed read.
-            st = (_x17_local_serve_table(sdir, X17_SERVE_LOCAL_ROW_MAX)
-                  if X17_SERVE_LOCAL_ROW_MAX > 0 else None)
+            st = (runtime.read_layout_table(
+                sdir, "d_bucket", ("doc_id", "n_spans", "n_dup_spans"),
+                X17_SERVE_LOCAL_ROW_MAX,
+            ) if X17_SERVE_LOCAL_ROW_MAX > 0 else None)
             if st is not None:
-                local_serves.append(st.append_column(
-                    "delivery_id",
-                    pa.array([k] * st.num_rows, pa.int32()),
-                ))
+                # dup_ratio as IEEE double division, bit-identical to
+                # the JVM's
+                ratio = pc.divide(
+                    st.column("n_dup_spans").cast(pa.float64()),
+                    st.column("n_spans").cast(pa.float64()),
+                )
+                local_serves.append(
+                    st.append_column("dup_ratio", ratio).append_column(
+                        "delivery_id",
+                        pa.array([k] * st.num_rows, pa.int32()),
+                    )
+                )
             else:
                 snap = os.path.join(work, f"serve{k}")
-                shutil.copytree(sdir, snap, copy_function=_link_or_copy)
+                shutil.copytree(
+                    sdir, snap, copy_function=runtime.link_or_copy
+                )
                 served.append(
                     spark.read.schema(
                         _SPAN_STATS_READ_SCHEMA
@@ -3337,7 +3106,7 @@ def x17_stream_maintained_spans(spark: SparkSession,
         # ONE materialization; the returned frame reads only its own
         # blocks, so the working dir (and any snapshots) can go in
         # the finally
-        return materialize_and_free(
+        return runtime.materialize_and_free(
             spark, before, out.coalesce(width)
         )
     finally:
@@ -3700,20 +3469,18 @@ def append_span_postings(batch_postings: DataFrame, out_dir: str,
     (lifecycle-locked in tests/test_llmops.py).
 
     The writer-task count follows the stats writer's
-    :func:`~hfcommunity_spark.operators.graph._write_tasks` rule
+    :func:`~hfcommunity_spark.runtime.write_tasks` rule
     (~16 buckets per task) instead of the session shuffle width
     (r14, guide §2.3/§6: a delivery-sized append through a width-32
     exchange paid 32 task setups + commits to move a few thousand
     rows — measured 1.52 s vs 0.62 s per append at sf0.1, identical
     one-file-per-touched-bucket layout since hash-partitioning on the
     bucket key maps each bucket to exactly one writer task)."""
-    from hfcommunity_spark.operators.graph import _write_tasks
-
     (
         batch_postings.withColumn(
             "h_bucket", F.pmod(F.col("h"), F.lit(buckets)).cast("int")
         )
-        .repartition(_write_tasks(buckets), F.col("h_bucket"))
+        .repartition(runtime.write_tasks(buckets), F.col("h_bucket"))
         .write.mode("append")
         .partitionBy("h_bucket")
         .parquet(out_dir)

@@ -27,6 +27,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from hfcommunity_spark import runtime
 from hfcommunity_spark.etl.fetch import (
     GIT_COMMIT_SCHEMA,
     git_commit_count,
@@ -838,14 +839,10 @@ def g_commit_ancestors(spark: SparkSession, sf_dir: str) -> DataFrame:
     local = _commit_ancestors_local(spark, sf_dir)
     if local is not None:
         return local
-    from hfcommunity_spark.operators.graph import (
-        ancestors,
-        materialize_and_free,
-        pinned_block_ids,
-    )
+    from hfcommunity_spark.operators.graph import ancestors
 
     base = _fixture_dag_repo(spark, sf_dir)
-    before = pinned_block_ids(spark)
+    before = runtime.pinned_block_ids(spark)
     keys = spark.createDataFrame([("fixture",)], "repo_name string")
     commits = map_fetch(
         keys, "repo_name", make_git_fetcher(base), GIT_COMMIT_SCHEMA
@@ -875,7 +872,7 @@ def g_commit_ancestors(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # pin the answer, free the BFS frontier + fixture-scan checkpoints
     # this invocation created (bench/serving loops pin results only)
-    return materialize_and_free(spark, before, out)
+    return runtime.materialize_and_free(spark, before, out)
 
 
 # Merge-base (LCA) pairs over the DAG fixture, by rank.  Chosen so
@@ -1190,14 +1187,10 @@ def g_merge_base(spark: SparkSession, sf_dir: str) -> DataFrame:
     local = _merge_base_local(spark, sf_dir)
     if local is not None:
         return local
-    from hfcommunity_spark.operators.graph import (
-        ancestors,
-        materialize_and_free,
-        pinned_block_ids,
-    )
+    from hfcommunity_spark.operators.graph import ancestors
 
     base = _fixture_dag_repo(spark, sf_dir)
-    before = pinned_block_ids(spark)
+    before = runtime.pinned_block_ids(spark)
     keys = spark.createDataFrame([("fixture",)], "repo_name string")
     commits = map_fetch(
         keys, "repo_name", make_git_fetcher(base), GIT_COMMIT_SCHEMA
@@ -1283,7 +1276,7 @@ def g_merge_base(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     # pin the |pairs| answer rows, free the reach-set checkpoints
-    return materialize_and_free(spark, before, out)
+    return runtime.materialize_and_free(spark, before, out)
 
 
 # ---------------------------------------------------------------------------

@@ -17,119 +17,14 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from hfcommunity_spark import runtime
+
 # Below this many distinct quotient edges, components_delta resolves
 # the merge map with a driver-side min-label union-find (bounded
 # collect) instead of the distributed CC loop — the quotient is
 # delivery-bounded by the operator's contract, and the distributed
 # machinery costs seconds of fixed per-round overhead at any size.
 QUOTIENT_LOCAL_EDGE_MAX = 100_000
-
-
-def _eager_checkpoint(df: DataFrame) -> tuple[DataFrame, list[int]]:
-    """``localCheckpoint(eager=True)`` plus the ids of the checkpoint's
-    newly persisted RDD blocks, so the caller can free a superseded
-    round's storage deterministically (see :func:`_free_checkpoint`).
-
-    The before/after diff of persistent RDDs is filtered to ids whose
-    RDD is actually locally checkpointed: the checkpoint JOB may also
-    materialize unrelated LAZY ``persist()`` caches upstream (e.g. a
-    session-persisted index feeding the edge pipeline), and without
-    the filter those ids were captured here and later unpersisted by
-    ``_free_checkpoint`` — silently evicting build-once/probe-many
-    caches for the rest of the session (round-5 review finding)."""
-    jsc = df.sparkSession.sparkContext._jsc
-    before = set(jsc.getPersistentRDDs().keySet().toArray())
-    ck = df.localCheckpoint(eager=True)
-    m = jsc.getPersistentRDDs()
-    new_ids = set(m.keySet().toArray()) - before
-    ck_ids = []
-    for i in new_ids:
-        rdd = m.get(i)
-        if rdd is not None and rdd.rdd().isLocallyCheckpointed():
-            ck_ids.append(i)
-    return ck, sorted(ck_ids)
-
-
-def _lazy_checkpoint(df: DataFrame) -> tuple[DataFrame, list[int]]:
-    """``localCheckpoint(eager=False)`` plus the new block ids — the
-    :func:`_eager_checkpoint` bookkeeping WITHOUT the materializing
-    job (r15, guide §2: per-job fixed cost dominates the iterative
-    operators at bench scale, and the caps-zeroed arm pays it at any
-    scale).  The mark registers the RDD with the block manager
-    immediately (ids are capturable before any action) and truncates
-    the returned frame's plan to the checkpoint scan, so the CALLER'S
-    next FULL-PASS action — the ``count()`` an iterative loop needs
-    anyway — materializes every partition in one job instead of two
-    (checkpoint job + probe job).
-
-    Contract: the first action the caller runs on the returned frame
-    must compute ALL partitions (``count``, a full write/collect —
-    NOT ``isEmpty``/``take``, whose partial pass would leave the
-    backfill to a second implicit job, re-paying what this fusion
-    removes)."""
-    jsc = df.sparkSession.sparkContext._jsc
-    before = set(jsc.getPersistentRDDs().keySet().toArray())
-    ck = df.localCheckpoint(eager=False)
-    m = jsc.getPersistentRDDs()
-    new_ids = set(m.keySet().toArray()) - before
-    ck_ids = []
-    for i in new_ids:
-        rdd = m.get(i)
-        if rdd is not None and rdd.rdd().isLocallyCheckpointed():
-            ck_ids.append(i)
-    return ck, sorted(ck_ids)
-
-
-def _free_checkpoint(spark: SparkSession, ids: list[int]) -> None:
-    """Release checkpoint blocks NOW instead of waiting for the GC-
-    driven ContextCleaner — otherwise long iterative chains grow
-    executor storage nondeterministically (ADVICE r4).  Local
-    checkpoint blocks ARE the data (lineage is truncated), so only free
-    a round once every frame derived from it has itself been eagerly
-    materialized."""
-    m = spark.sparkContext._jsc.getPersistentRDDs()
-    for i in ids:
-        rdd = m.get(i)
-        if rdd is not None:
-            rdd.unpersist(False)
-
-
-def pinned_block_ids(spark: SparkSession) -> set:
-    """Snapshot the persistent-RDD id set — the BEFORE half of the
-    invocation checkpoint-hygiene discipline (see
-    :func:`materialize_and_free`)."""
-    return set(spark.sparkContext._jsc.getPersistentRDDs()
-               .keySet().toArray())
-
-
-def materialize_and_free(spark: SparkSession, before: set,
-                         out: DataFrame) -> DataFrame:
-    """The x15 checkpoint-hygiene discipline as a reusable seam for
-    declared queries built on iterative operators: eagerly checkpoint
-    the (small) final frame, then free every locally-checkpointed
-    block this invocation created — BFS frontiers, per-round edge/
-    degree pins — so repeated invocations (the bench loop, a long
-    serving session) pin only their results, not hundreds of MB of
-    dead intermediates waiting for the GC-driven ContextCleaner.
-    The isLocallyCheckpointed filter keeps session ``persist()``
-    caches out, exactly as in ``_eager_checkpoint``.
-
-    NOT safe under concurrent invocations sharing one SparkSession:
-    the before/after diff is session-global, so a parallel thread's
-    in-flight checkpoint blocks would land in this invocation's freed
-    set (truncated lineage → unrecomputable).  Every consumer in this
-    repo — the bench loop, the driver contract, the declared-query
-    faces — runs queries sequentially per session by design; a
-    concurrent serving deployment must scope its own hygiene."""
-    m = spark.sparkContext._jsc.getPersistentRDDs()
-    created = [
-        i for i in set(m.keySet().toArray()) - before
-        if (r := m.get(i)) is not None
-        and r.rdd().isLocallyCheckpointed()
-    ]
-    out = out.localCheckpoint()
-    _free_checkpoint(spark, created)
-    return out
 
 
 # Work budget for the driver-local ancestry twin: multi-source BFS
@@ -228,10 +123,11 @@ def ancestors(commit_parents: DataFrame, start_shas: DataFrame,
     edges = commit_parents.select(
         F.col("commit_sha").alias("child"), F.col("parent_sha").alias("parent")
     ).persist()  # probed once per hop; upstream lineage may be expensive
-    frontier, _start_ids = _lazy_checkpoint(
+    frontier, _start_ids = runtime.checkpoint(
         start_shas.select(
             F.col("sha"), F.col("sha").alias("node"), F.lit(0).alias("hops")
-        )
+        ),
+        eager=False,
     )
     seen = frontier
     for hop in range(1, max_hops + 1):
@@ -243,12 +139,12 @@ def ancestors(commit_parents: DataFrame, start_shas: DataFrame,
         # keep only nodes not reached at a smaller hop count
         step = step.join(seen.select("sha", "node"), ["sha", "node"], "left_anti")
         # lazy checkpoint + count (r15): the count both materializes
-        # the hop's frontier (full pass — the _lazy_checkpoint
+        # the hop's frontier (full pass — the lazy-checkpoint
         # contract) and answers the emptiness probe, one job per hop
         # instead of the eager-checkpoint + isEmpty pair
-        step, step_ids = _lazy_checkpoint(step)
+        step, step_ids = runtime.checkpoint(step, eager=False)
         if step.count() == 0:
-            _free_checkpoint(spark, step_ids)
+            runtime.free(spark, step_ids)
             break
         seen = seen.unionByName(step)
         frontier = step
@@ -309,7 +205,7 @@ def connected_components(edges: DataFrame, src: str = "src",
     )
     # lazy checkpoint + count (r15): one job materializes the deduped
     # edge set AND sizes the adaptive dispatch
-    e, e_ids = _lazy_checkpoint(e0.distinct())
+    e, e_ids = runtime.checkpoint(e0.distinct(), eager=False)
     n_edges = e.count()
     # the single-task path vectorizes over int64 ids; non-integral
     # vertex types (string shas) take the star path at ANY size —
@@ -384,7 +280,7 @@ def _star_components(edges: DataFrame, src: str, dst: str,
         edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
         .filter(F.col("a") != F.col("b"))
     )
-    e, e_ids = _eager_checkpoint(e0.distinct())
+    e, e_ids = runtime.checkpoint(e0.distinct(), eager=True)
     return _star_rounds(spark, e, e_ids, e.count(), max_iters)
 
 
@@ -408,10 +304,11 @@ def _star_rounds(spark: SparkSession, e: DataFrame, e_ids: list[int],
     # label join.  Eager (not lazy): round 1's checkpoint supersedes
     # the initial edge set and frees its blocks below, so everything
     # that reads them must be materialized first.
-    vertices, _vertex_ids = _eager_checkpoint(
+    vertices, _vertex_ids = runtime.checkpoint(
         e.select(F.col("a").alias("vertex"))
         .unionByName(e.select(F.col("b").alias("vertex")))
-        .distinct()
+        .distinct(),
+        eager=True,
     )
     converged = False
     rounds = 0
@@ -445,13 +342,14 @@ def _star_rounds(spark: SparkSession, e: DataFrame, e_ids: list[int],
         # Lazy checkpoint + count (r15): the round's fixpoint count
         # materializes the round's edge set in the same job — one job
         # per round instead of checkpoint + count
-        small, small_ids = _lazy_checkpoint(
+        small, small_ids = runtime.checkpoint(
             sym2.filter(F.col("b") < F.col("a"))
             .join(mins2, "a")
             .select(F.col("b").alias("a"), F.col("m").alias("b"))
             .unionByName(mins2.select("a", F.col("m").alias("b")))
             .filter(F.col("a") != F.col("b"))
-            .distinct()
+            .distinct(),
+            eager=False,
         )
         new_n = small.count()
         # fixpoint ⇔ same distinct edge set: equal cardinality AND
@@ -462,7 +360,7 @@ def _star_rounds(spark: SparkSession, e: DataFrame, e_ids: list[int],
         )
         # this round's checkpoint supersedes the previous edge set —
         # free its blocks now (vertices was materialized up front)
-        _free_checkpoint(spark, e_ids)
+        runtime.free(spark, e_ids)
         e, e_ids, n_edges = small, small_ids, new_n
         if same:
             converged = True
@@ -565,12 +463,14 @@ def _min_label_components(edges: DataFrame, src: str, dst: str,
         mid = _step(labels, with_old=False)
         # lazy checkpoint (r15): the convergence count materializes
         # the round — one job per materialized round, not two
-        new_labels, new_ids = _lazy_checkpoint(_step(mid, with_old=True))
+        new_labels, new_ids = runtime.checkpoint(
+            _step(mid, with_old=True), eager=False
+        )
         n_changed = new_labels.filter(
             F.col("component") != F.col("__old")
         ).count()
         rounds += 2
-        _free_checkpoint(spark, prev_ids)
+        runtime.free(spark, prev_ids)
         prev_ids = new_ids
         labels = new_labels.select("vertex", "component")
         if n_changed == 0:
@@ -633,10 +533,11 @@ def component_merge_plan(
     # re-execute once per reference — eagerly checkpoint it up front,
     # which is cheap BY CONTRACT (the frame is delivery-bounded), and
     # freed before returning once fresh/relabel are materialized.
-    e, _e_ids = _eager_checkpoint(
+    e, _e_ids = runtime.checkpoint(
         new_edges.select(F.col(src).alias("a"), F.col(dst).alias("b")).filter(
             F.col("a") != F.col("b")
-        )
+        ),
+        eager=True,
     )
     verts = (
         e.select(F.col("a").alias("vertex"))
@@ -668,8 +569,8 @@ def component_merge_plan(
     # caller folding a stream of deliveries must not accumulate pinned
     # blocks per delivery — the same discipline as the pruned variant
     # below (round-8 review finding).
-    fresh, _f_ids = _eager_checkpoint(fresh)
-    _free_checkpoint(spark, _e_ids)
+    fresh, _f_ids = runtime.checkpoint(fresh, eager=True)
+    runtime.free(spark, _e_ids)
     return fresh, relabel
 
 
@@ -717,12 +618,13 @@ def _quotient_relabel(spark, quot: DataFrame) -> DataFrame | None:
     already-checkpointed quotient — calling ``connected_components``
     re-paid a distinct shuffle + checkpoint + count on a frame that
     just had all three."""
-    quot, quot_ids = _lazy_checkpoint(
-        quot.filter(F.col("src") != F.col("dst")).distinct()
+    quot, quot_ids = runtime.checkpoint(
+        quot.filter(F.col("src") != F.col("dst")).distinct(),
+        eager=False,
     )
     n_quot = quot.count()
     if n_quot == 0:
-        _free_checkpoint(spark, quot_ids)
+        runtime.free(spark, quot_ids)
         return None
     if n_quot <= QUOTIENT_LOCAL_EDGE_MAX:
         # the quotient is delivery-bounded BY CONTRACT, and here it is
@@ -735,7 +637,7 @@ def _quotient_relabel(spark, quot: DataFrame) -> DataFrame | None:
         pairs = _driver_union_find(
             (row.src, row.dst) for row in quot.collect()
         )
-        _free_checkpoint(spark, quot_ids)
+        runtime.free(spark, quot_ids)
         if not pairs:
             return None
         vt = quot.schema["src"].dataType
@@ -784,10 +686,10 @@ def _quotient_relabel(spark, quot: DataFrame) -> DataFrame | None:
         # the relabel map is small (merged components only): pin it,
         # then free the quotient checkpoint blocks — the merge path
         # used to leak them for the session, exactly the storage
-        # growth _free_checkpoint exists to prevent (round-6 review
+        # growth runtime.free exists to prevent (round-6 review
         # finding)
-        relabel, _relabel_ids = _eager_checkpoint(relabel)
-        _free_checkpoint(spark, quot_ids)
+        relabel, _relabel_ids = runtime.checkpoint(relabel, eager=True)
+        runtime.free(spark, quot_ids)
     return relabel
 
 
@@ -828,7 +730,9 @@ def write_component_assign(assign: DataFrame, out_dir: str,
     job, not one per writer task (the span layout's measured
     file-fanout lesson)."""
     (
-        assign.withColumn("c_bucket", _bucket_expr("component", buckets))
+        assign.withColumn(
+            "c_bucket", runtime.bucket_expr("component", buckets)
+        )
         .repartition(F.col("c_bucket"))
         .write.mode("overwrite")
         .partitionBy("c_bucket")
@@ -851,65 +755,6 @@ def _assign_rel(spark, rel_or_dir) -> DataFrame:
     )
 
 
-def _bucket_expr(col: str, buckets: int):
-    """THE bucket function, single-sourced: writers partition by it
-    and readers prune by it — a drift between the two would silently
-    select the wrong partitions."""
-    return F.pmod(F.xxhash64(F.col(col)), F.lit(buckets)).cast("int")
-
-
-# xxHash64 primes (public algorithm constants, Y. Collet's xxHash)
-_XXP1 = 0x9E3779B185EBCA87
-_XXP2 = 0xC2B2AE3D27D4EB4F
-_XXP3 = 0x165667B19E3779F9
-_XXP4 = 0x85EBCA77C2B2AE63
-_XXP5 = 0x27D4EB2F165667C5
-_M64 = (1 << 64) - 1
-
-
-def _xxh64_long(value: int, seed: int = 42) -> int:
-    """``F.xxhash64`` of ONE BIGINT value, driver-side: the standard
-    XXH64 single-8-byte-lane path with Spark's default seed 42,
-    returned as a signed 64-bit int exactly like the SQL function.
-    Exists so bucket ids of DRIVER-LOCAL frames (relabel maps, fresh
-    rows — bounded by contract) cost zero Spark jobs; parity with the
-    JVM expression is property-locked in tests/test_graph.py, and
-    :func:`_bucket_expr` remains the single source of truth for
-    anything distributed."""
-    h = (seed + _XXP5 + 8) & _M64
-    k = ((value & _M64) * _XXP2) & _M64
-    k = ((k << 31) | (k >> 33)) & _M64
-    h ^= (k * _XXP1) & _M64
-    h = ((((h << 27) | (h >> 37)) & _M64) * _XXP1 + _XXP4) & _M64
-    h ^= h >> 33
-    h = (h * _XXP2) & _M64
-    h ^= h >> 29
-    h = (h * _XXP3) & _M64
-    h ^= h >> 32
-    return h - (1 << 64) if h >= (1 << 63) else h
-
-
-def _py_bucket(value: int, buckets: int) -> int:
-    """Driver-side twin of :func:`_bucket_expr` for integral keys
-    (Python ``%`` on a positive modulus IS pmod)."""
-    return _xxh64_long(value) % buckets
-
-
-def _bucket_ids(df: DataFrame, cols, buckets: int) -> list[int]:
-    """Distinct bucket ids of one or more key columns, in ONE job.
-    ``collect_set`` instead of ``distinct().collect()``: partial
-    aggregation dedupes map-side, so each task ships ≤ ``buckets``
-    values and the driver receives one ≤ ``buckets``-sized array —
-    bounded by the BUCKET COUNT even when the frame is not delivery-
-    bounded (e.g. the changed-row set of a large-component merge),
-    and without the full shuffle a ``distinct`` pays."""
-    exprs = [_bucket_expr(c, buckets) for c in cols]
-    row = df.select(
-        F.explode(F.array(*exprs)).alias("b")
-    ).agg(F.collect_set("b").alias("bs")).first()
-    return sorted(row.bs or [])
-
-
 def relabel_affected_buckets(spark, assign_rel, relabel: DataFrame,
                              buckets: int = ASSIGN_C_BUCKETS) -> DataFrame:
     """The rows a delivery's relabel map CHANGES, read partition-
@@ -921,7 +766,7 @@ def relabel_affected_buckets(spark, assign_rel, relabel: DataFrame,
     rows of untouched components, and the merged targets' buckets
     gain rows.  The writer that replaces partitions correctly is
     :func:`apply_relabel_in_place`."""
-    bkts = _bucket_ids(relabel, ["component"], buckets)
+    bkts = runtime.bucket_ids(relabel, ["component"], buckets)
     scan = _assign_rel(spark, assign_rel).filter(
         F.col("c_bucket").isin(bkts)
     )
@@ -930,161 +775,12 @@ def relabel_affected_buckets(spark, assign_rel, relabel: DataFrame,
     )
 
 
-def _write_tasks(n_buckets: int) -> int:
-    """Writer-task count for a partition-pruned rewrite: ~16 output
-    files (= touched buckets) per task.  The touched set is delivery-
-    bounded and buckets are size-bounded, so per-task volume stays
-    flat at any history size; a task-per-shuffle-partition layout
-    (measured 1.2 s vs 0.5 s per rewrite at 64 buckets) pays 32 task
-    setups to write a delivery-sized change, and an AQE REBALANCE
-    costs an extra stage that outweighs the coalesce on frames this
-    small."""
-    return max(1, -(-n_buckets // 16))
-
-
 # Cap on rows the DRIVER-LOCAL writer fast path will materialize: the
 # touched buckets' contents, bounded by design at
 # ASSIGN_ROWS_PER_BUCKET × |touched buckets| (a delivery-bounded set).
 # Two int64 columns at this cap is ~8 MB of driver heap; above it the
 # writers take the distributed path unchanged.
 WRITER_LOCAL_ROW_MAX = 512_000
-
-
-def _local_bucket_rows(dir_: str, pcol: str, bkts,
-                       cap: int | None = None
-                       ) -> dict[int, list] | None:
-    """Driver-side pruned read of the touched buckets' parquet files:
-    the exact row set the distributed writers' partition-pruned scan
-    produces, collected without a Spark job.  Returns None — BEFORE
-    any mutation — when a gate fails (non-local layout, unreadable or
-    corrupt file, more than ``cap`` rows), in which case the caller
-    runs the distributed path on the same inputs.  ``cap`` defaults to
-    :data:`WRITER_LOCAL_ROW_MAX` resolved at CALL time (not def time)
-    so pinning the module global — as the fallback-forcing tests do —
-    actually tunes the gate."""
-    import os
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    if cap is None:
-        cap = WRITER_LOCAL_ROW_MAX
-    if cap <= 0:
-        # cap pinned to 0 means "never local": skip the driver-side
-        # bucket read outright (r14, caps-zeroed arm)
-        return None
-    out: dict[int, list] = {}
-    total = 0
-    try:
-        for b in bkts:
-            d = os.path.join(dir_, f"{pcol}={b}")
-            if not os.path.isdir(d):
-                continue
-            rows: list = []
-            for fn in sorted(os.listdir(d)):
-                if fn.startswith(("_", ".")) or not fn.endswith(".parquet"):
-                    continue
-                t = pq.read_table(
-                    os.path.join(d, fn), columns=["vertex", "component"]
-                )
-                total += t.num_rows
-                if total > cap:
-                    return None
-                rows.extend(
-                    zip(t.column("vertex").to_pylist(),
-                        t.column("component").to_pylist())
-                )
-            out[b] = rows
-    except (OSError, pa.lib.ArrowException):
-        # ArrowInvalid (corrupt/truncated footer) is a ValueError, not
-        # an OSError — both mean "can't trust this layout locally"
-        return None
-    return out
-
-
-def _local_bucket_write(dir_: str, pcol: str,
-                        by_bucket: dict[int, list],
-                        emptied) -> None:
-    """Driver-side twin of the dynamic-partition-overwrite write: each
-    output bucket's directory is replaced with one fresh snappy
-    parquet file (same two-column int64 schema the Spark writer
-    produces), emptied buckets' directories are dropped, untouched
-    partitions are never opened.  Mutations only — every gate has
-    already passed; an I/O error here propagates (falling back to the
-    distributed path after a partial rewrite would fold corrupt
-    state).  Commit order matches Spark's dynamic overwrite: the
-    replacement file is written INTO the directory first (old files
-    still present), the old files are unlinked only after that write
-    succeeds — so a crash or I/O error mid-bucket never leaves an
-    emptied directory that silently loses untouched components' rows;
-    the recoverable states are old-only (write failed) or old+new
-    (unlink didn't run), both detectable and re-foldable."""
-    import os
-    import uuid
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    for b, rows in by_bucket.items():
-        d = os.path.join(dir_, f"{pcol}={b}")
-        old = (
-            [fn for fn in os.listdir(d)
-             if not fn.startswith(("_", "."))]
-            if os.path.isdir(d) else []
-        )
-        os.makedirs(d, exist_ok=True)
-        vs, cs = zip(*rows)
-        pq.write_table(
-            pa.table({
-                "vertex": pa.array(vs, pa.int64()),
-                "component": pa.array(cs, pa.int64()),
-            }),
-            os.path.join(
-                d, f"part-00000-{uuid.uuid4().hex}.snappy.parquet"
-            ),
-            compression="snappy",
-        )
-        for fn in old:
-            os.unlink(os.path.join(d, fn))
-    _drop_bucket_dirs(dir_, pcol, emptied)
-
-
-def _drop_bucket_dirs(dir_: str, pcol: str, bkts) -> None:
-    """Remove emptied buckets' directories (files first, then the
-    dir) — shared by the driver-local writer and its crash-recovery
-    story: a partially-dropped bucket just re-drops next fold."""
-    import os
-    import shutil
-
-    for b in bkts:
-        d = os.path.join(dir_, f"{pcol}={b}")
-        if os.path.isdir(d):
-            shutil.rmtree(d)
-
-
-def _sync_catalog_partitions(spark, table_name: str, pcol: str,
-                             added, dropped) -> None:
-    """Keep a catalog-registered layout's partition METADATA in step
-    with the path-based writers: dynamic overwrite to the LOCATION
-    creates/empties directories the metastore never hears about, so a
-    catalog-pruned read would miss a fresh bucket or touch a dropped
-    one (round-8 review finding).  Both lists are bounded by the
-    delivery, and each folds into ONE multi-partition ALTER statement
-    (never MSCK's O(buckets) re-listing; the one-statement-per-bucket
-    form cost ~11 ms × 64 churning buckets × deliveries — measured
-    1.8 s of the x15 lifecycle before batching)."""
-    if added:
-        specs = " ".join(
-            f"PARTITION ({pcol}={int(b)})" for b in sorted(added)
-        )
-        spark.sql(
-            f"ALTER TABLE {table_name} ADD IF NOT EXISTS {specs}"
-        )
-    if dropped:
-        specs = ", ".join(
-            f"PARTITION ({pcol}={int(b)})" for b in sorted(dropped)
-        )
-        spark.sql(f"ALTER TABLE {table_name} DROP IF EXISTS {specs}")
 
 
 def apply_relabel_in_place(spark, assign_dir: str,
@@ -1126,7 +822,8 @@ def apply_relabel_in_place(spark, assign_dir: str,
     ONE partition-pruned read instead of two (measured ~1 s/fold of
     the x15 lifecycle)."""
     import os
-    import shutil
+
+    import pyarrow as pa
 
     def _empty_changes():
         if not return_changes:
@@ -1154,7 +851,7 @@ def apply_relabel_in_place(spark, assign_dir: str,
         if not relmap and not fr_pairs:
             return _empty_changes()
         bkts = sorted({
-            _py_bucket(k, buckets)
+            runtime.py_bucket(k, buckets)
             for k in set(relmap) | set(relmap.values())
             | {c for _, c in fr_pairs}
         })
@@ -1170,7 +867,10 @@ def apply_relabel_in_place(spark, assign_dir: str,
         vt = (fresh.schema["vertex"].dataType if fresh is not None
               else relabel.schema["component"].dataType)
         data = (
-            _local_bucket_rows(assign_dir, "c_bucket", bkts)
+            runtime.read_bucket_rows(
+                assign_dir, "c_bucket", bkts, ("vertex", "component"),
+                WRITER_LOCAL_ROW_MAX,
+            )
             if vt.simpleString() == "bigint"
             and os.path.isdir(assign_dir) else None
         )
@@ -1183,30 +883,33 @@ def apply_relabel_in_place(spark, assign_dir: str,
                         c = relmap[c]
                         changes.append((v, c))
                     by_bucket.setdefault(
-                        _py_bucket(c, buckets), []
+                        runtime.py_bucket(c, buckets), []
                     ).append((v, c))
             for v, c in fr_pairs:
                 changes.append((v, c))
                 by_bucket.setdefault(
-                    _py_bucket(c, buckets), []
+                    runtime.py_bucket(c, buckets), []
                 ).append((v, c))
             present = set(by_bucket)
             emptied = set(bkts) - present
-            _local_bucket_write(
-                assign_dir, "c_bucket", by_bucket, emptied
+            runtime.write_bucket_files(
+                assign_dir, "c_bucket", by_bucket,
+                (("vertex", pa.int64()), ("component", pa.int64())),
+                append=False,
             )
+            runtime.drop_bucket_dirs(assign_dir, "c_bucket", emptied)
             # Spark's own insert command refreshes cached file
             # listings for the destination path; the driver-side
             # writer must do the same or a catalog/path read could
             # serve the replaced files' stale names
             spark.catalog.refreshByPath(assign_dir)
             if table_name is not None:
-                _sync_catalog_partitions(
+                runtime.sync_catalog_partitions(
                     spark, table_name, "c_bucket",
                     added=present, dropped=emptied,
                 )
             if return_changes:
-                return _local_frame(
+                return runtime.local_frame(
                     spark, changes,
                     T.StructType([
                         T.StructField("vertex", vt),
@@ -1251,7 +954,7 @@ def apply_relabel_in_place(spark, assign_dir: str,
         kdf = keys[0]
         for part in keys[1:]:
             kdf = kdf.unionByName(part)
-        bkts = _bucket_ids(kdf, ["k"], buckets)
+        bkts = runtime.bucket_ids(kdf, ["k"], buckets)
 
     updated = _assign_rel(spark, assign_rel or assign_dir).filter(
         F.col("c_bucket").isin(bkts)
@@ -1271,7 +974,7 @@ def apply_relabel_in_place(spark, assign_dir: str,
             fresh_rows.withColumn("_chg", F.lit(True))
         )
     updated = updated.withColumn(
-        "c_bucket", _bucket_expr("component", buckets)
+        "c_bucket", runtime.bucket_expr("component", buckets)
     )
     # cut lineage from the files about to be replaced — LAZY mark
     # (r15): the present-buckets collect below is a full pass, so it
@@ -1285,7 +988,7 @@ def apply_relabel_in_place(spark, assign_dir: str,
     try:
         (
             rows.drop("_chg")
-            .repartition(_write_tasks(len(bkts)), F.col("c_bucket"))
+            .repartition(runtime.write_tasks(len(bkts)), F.col("c_bucket"))
             .write.mode("overwrite")
             .partitionBy("c_bucket")
             .parquet(assign_dir)
@@ -1293,12 +996,9 @@ def apply_relabel_in_place(spark, assign_dir: str,
     finally:
         spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
     emptied = set(bkts) - present
-    for b in emptied:
-        d = os.path.join(assign_dir, f"c_bucket={b}")
-        if os.path.isdir(d):
-            shutil.rmtree(d)
+    runtime.drop_bucket_dirs(assign_dir, "c_bucket", emptied)
     if table_name is not None:
-        _sync_catalog_partitions(
+        runtime.sync_catalog_partitions(
             spark, table_name, "c_bucket", added=present, dropped=emptied
         )
     if return_changes:
@@ -1324,7 +1024,7 @@ def write_vertex_assign(assign: DataFrame, out_dir: str,
     (``n_rows // ASSIGN_ROWS_PER_BUCKET``) so bucket size — and with
     it per-lookup IO — is constant at any history size."""
     (
-        assign.withColumn("v_bucket", _bucket_expr("vertex", buckets))
+        assign.withColumn("v_bucket", runtime.bucket_expr("vertex", buckets))
         .repartition(F.col("v_bucket"))
         .write.mode("overwrite")
         .partitionBy("v_bucket")
@@ -1340,7 +1040,7 @@ def resolve_assign_pruned(spark, assign_rel, verts: DataFrame,
     delivery) reaches the scan as a PartitionFilter, then a broadcast
     semi-join keeps the looked-up rows.  Vertices absent from the
     table simply return no row (the caller treats them as fresh)."""
-    bkts = _bucket_ids(verts, ["vertex"], buckets)
+    bkts = runtime.bucket_ids(verts, ["vertex"], buckets)
     scan = _assign_rel(spark, assign_rel).filter(
         F.col("v_bucket").isin(bkts)
     )
@@ -1355,24 +1055,12 @@ def resolve_assign_pruned(spark, assign_rel, verts: DataFrame,
 _RESOLVE_ISIN_MAX = 5_000
 
 
-def _local_frame(spark, rows, schema) -> DataFrame:
-    """A driver-local frame that CARRIES its rows at ``_hfc_rows`` —
-    the advisory seam the partition-pruned writers use to compute
-    bucket ids and fresh-row merges in Python instead of paying a
-    ~0.6 s Spark job per hundred-row local relation (measured on the
-    x15 lifecycle).  The attribute is best-effort: any consumer that
-    ignores it just runs the distributed plan on the same values."""
-    df = spark.createDataFrame(rows, schema)
-    df._hfc_rows = rows
-    return df
-
-
 def _merge_plan_local(spark, vertex_rel, edges, buckets: int,
                       vt, vertex_dir: str | None = None,
                       ) -> tuple[DataFrame, DataFrame | None]:
     """Driver-side merge plan over a bounded, already-collected edge
     set: one partition-pruned probe resolves the endpoints' standing
-    labels (bucket ids computed in Python — :func:`_py_bucket`), then
+    labels (bucket ids computed in Python — ``runtime.py_bucket``), then
     the fresh set, quotient graph, and union-find all run in Python.
     Value-identical to the distributed plan (parity-locked by the
     threshold-pinning tests); returns LOCAL frames, which every
@@ -1380,7 +1068,7 @@ def _merge_plan_local(spark, vertex_rel, edges, buckets: int,
 
     With ``vertex_dir`` (a local-fs layout directory) the label probe
     itself goes driver-side: a pyarrow read of the touched v_buckets
-    (:func:`_local_bucket_rows`, same row cap as the writers) — the
+    (``runtime.read_bucket_rows``, same row cap as the writers) — the
     plan then costs zero Spark jobs.  Any gate failure falls back to
     the pruned-scan probe below on the same inputs."""
     import os
@@ -1390,12 +1078,15 @@ def _merge_plan_local(spark, vertex_rel, edges, buckets: int,
     ])
     edges = {(a, b) for a, b in edges}
     if not edges:
-        return _local_frame(spark, [], schema), None
+        return runtime.local_frame(spark, [], schema), None
     verts = sorted({v for ab in edges for v in ab})
-    bkts = sorted({_py_bucket(v, buckets) for v in verts})
+    bkts = sorted({runtime.py_bucket(v, buckets) for v in verts})
     resolved = None
     if vertex_dir is not None and os.path.isdir(vertex_dir):
-        data = _local_bucket_rows(vertex_dir, "v_bucket", bkts)
+        data = runtime.read_bucket_rows(
+            vertex_dir, "v_bucket", bkts, ("vertex", "component"),
+            WRITER_LOCAL_ROW_MAX,
+        )
         if data is not None:
             want = set(verts)
             resolved = {
@@ -1424,12 +1115,12 @@ def _merge_plan_local(spark, vertex_rel, edges, buckets: int,
     quot = {
         (look[a], look[b]) for a, b in edges if look[a] != look[b]
     }
-    fresh = _local_frame(
+    fresh = runtime.local_frame(
         spark, [(v, v) for v in verts if v not in resolved], schema
     )
     pairs = _driver_union_find(quot)
     relabel = (
-        _local_frame(
+        runtime.local_frame(
             spark, pairs,
             T.StructType([
                 T.StructField("component", vt),
@@ -1479,7 +1170,7 @@ def component_merge_plan_pruned(
     guarded collect job entirely, and passing ``vertex_dir`` (the
     layout's local-fs directory) lets the local plan's label probe
     read the touched v_buckets driver-side
-    (:func:`_local_bucket_rows`) instead of running one pruned-scan
+    (``runtime.read_bucket_rows``) instead of running one pruned-scan
     job per fold — zero Spark jobs for a bounded delivery's whole
     merge plan."""
     edge_rows = getattr(new_edges, "_hfc_rows", None)
@@ -1513,14 +1204,15 @@ def component_merge_plan_pruned(
     # inside the quotient count / fresh checkpoint — two dedicated
     # checkpoint jobs per delivery removed; both blocks are still
     # freed below once everything derived from them is materialized
-    e, _e_ids = _lazy_checkpoint(e0)
+    e, _e_ids = runtime.checkpoint(e0, eager=False)
     verts = (
         e.select(F.col("a").alias("vertex"))
         .unionByName(e.select(F.col("b").alias("vertex")))
         .distinct()
     )
-    resolved, _r_ids = _lazy_checkpoint(
-        resolve_assign_pruned(spark, vertex_rel, verts, buckets)
+    resolved, _r_ids = runtime.checkpoint(
+        resolve_assign_pruned(spark, vertex_rel, verts, buckets),
+        eager=False,
     )
     fresh = verts.join(resolved, "vertex", "left_anti").select(
         "vertex", F.col("vertex").alias("component")
@@ -1545,9 +1237,9 @@ def component_merge_plan_pruned(
     # of them (driver rows on the local path, re-checkpointed on the
     # distributed path), so nothing returned derives from e/resolved
     # and a per-delivery caller must not accumulate pinned blocks
-    # (the round-6 leak class _free_checkpoint exists to prevent)
-    fresh, _f_ids = _eager_checkpoint(fresh)
-    _free_checkpoint(spark, _e_ids + _r_ids)
+    # (the round-6 leak class runtime.free exists to prevent)
+    fresh, _f_ids = runtime.checkpoint(fresh, eager=True)
+    runtime.free(spark, _e_ids + _r_ids)
     return fresh, relabel
 
 
@@ -1621,6 +1313,8 @@ def apply_changes_vertex_layout(spark, vertex_dir: str,
     back to the distributed path below before any mutation."""
     import os
 
+    import pyarrow as pa
+
     ch_rows = getattr(changed, "_hfc_rows", None)
     if (ch_rows is not None
             and changed.schema["vertex"].dataType.simpleString()
@@ -1628,8 +1322,11 @@ def apply_changes_vertex_layout(spark, vertex_dir: str,
             and os.path.isdir(vertex_dir)):
         if not ch_rows:
             return
-        lbkts = sorted({_py_bucket(v, buckets) for v, _ in ch_rows})
-        data = _local_bucket_rows(vertex_dir, "v_bucket", lbkts)
+        lbkts = sorted({runtime.py_bucket(v, buckets) for v, _ in ch_rows})
+        data = runtime.read_bucket_rows(
+            vertex_dir, "v_bucket", lbkts, ("vertex", "component"),
+            WRITER_LOCAL_ROW_MAX,
+        )
         if data is not None:
             upd = dict(ch_rows)
             seen: set = set()
@@ -1647,17 +1344,21 @@ def apply_changes_vertex_layout(spark, vertex_dir: str,
                 if v not in seen:
                     seen.add(v)
                     by_bucket.setdefault(
-                        _py_bucket(v, buckets), []
+                        runtime.py_bucket(v, buckets), []
                     ).append((v, c))
-            _local_bucket_write(vertex_dir, "v_bucket", by_bucket, ())
+            runtime.write_bucket_files(
+                vertex_dir, "v_bucket", by_bucket,
+                (("vertex", pa.int64()), ("component", pa.int64())),
+                append=False,
+            )
             spark.catalog.refreshByPath(vertex_dir)
             if table_name is not None:
-                _sync_catalog_partitions(
+                runtime.sync_catalog_partitions(
                     spark, table_name, "v_bucket",
                     added=lbkts, dropped=(),
                 )
             return
-    bkts = _bucket_ids(changed, ["vertex"], buckets)
+    bkts = runtime.bucket_ids(changed, ["vertex"], buckets)
     if not bkts:
         return
     upd = F.broadcast(changed.select(
@@ -1669,7 +1370,7 @@ def apply_changes_vertex_layout(spark, vertex_dir: str,
     merged = existing.join(upd, "vertex", "full_outer").select(
         "vertex",
         F.coalesce("new_component", "component").alias("component"),
-    ).withColumn("v_bucket", _bucket_expr("vertex", buckets))
+    ).withColumn("v_bucket", runtime.bucket_expr("vertex", buckets))
     # LAZY mark (r15): plan truncation at mark time is what breaks the
     # self-overwrite cycle; the write itself is the full-pass action
     # that materializes the blocks (deletes only commit after the job,
@@ -1680,7 +1381,7 @@ def apply_changes_vertex_layout(spark, vertex_dir: str,
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     try:
         (
-            rows.repartition(_write_tasks(len(bkts)), F.col("v_bucket"))
+            rows.repartition(runtime.write_tasks(len(bkts)), F.col("v_bucket"))
             .write.mode("overwrite")
             .partitionBy("v_bucket")
             .parquet(vertex_dir)
@@ -1688,7 +1389,7 @@ def apply_changes_vertex_layout(spark, vertex_dir: str,
     finally:
         spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
     if table_name is not None:
-        _sync_catalog_partitions(
+        runtime.sync_catalog_partitions(
             spark, table_name, "v_bucket", added=bkts, dropped=()
         )
 
@@ -1886,7 +1587,7 @@ def g_pagerank_fixed_iter(spark: SparkSession, sf_dir: str) -> DataFrame:
     from hfcommunity_spark.io import read_table
 
     li = read_table(spark, sf_dir, "lineitem")
-    before = pinned_block_ids(spark)
+    before = runtime.pinned_block_ids(spark)
     e0 = li.select(
         F.col("l_suppkey").cast("bigint").alias("src"),
         (F.col("l_partkey") + PR_PART_OFFSET).cast("bigint").alias("dst"),
@@ -1902,4 +1603,4 @@ def g_pagerank_fixed_iter(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select("node", "pr", "rank")
     # the edge/degree checkpoints inside pagerank_fixed back only this
     # invocation's lineage — pin the PR_TOP_K result, free them
-    return materialize_and_free(spark, before, out)
+    return runtime.materialize_and_free(spark, before, out)

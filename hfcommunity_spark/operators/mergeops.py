@@ -35,6 +35,7 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from hfcommunity_spark import runtime
 from hfcommunity_spark.io import read_table
 from hfcommunity_spark.registry import query
 
@@ -900,10 +901,6 @@ def x19_stream_scd2_dim(spark: SparkSession, sf_dir: str) -> DataFrame:
     at serve time.  That is the property the sf1→sf3 growth step
     graded in round 10: per-fold cost must not scale with accumulated
     history."""
-    from hfcommunity_spark.operators.graph import (
-        _eager_checkpoint,
-        _free_checkpoint,
-    )
     from hfcommunity_spark.session import default_parallelism
 
     width = default_parallelism()
@@ -942,16 +939,16 @@ def x19_stream_scd2_dim(spark: SparkSession, sf_dir: str) -> DataFrame:
             & (F.col("event_id") < F.lit(hi_cut))
         )
 
-    jsc = spark.sparkContext._jsc
-    before = set(jsc.getPersistentRDDs().keySet().toArray())
+    before = runtime.pinned_block_ids(spark)
     # the maintained dimension carries its fold watermark
     # (_last_event_ts) so the in-order check is complete — fused into
     # the base build's own window pass (r10 verdict ask: no separate
     # seed groupBy+join); serving drops the column below
-    dim0, _ = _eager_checkpoint(
+    dim0, _ = runtime.checkpoint(
         scd2_history(slice_k(0, 1), key="user_id", state="event_type",
                      ts="ts", tiebreak="event_id",
-                     with_last_ts=True).coalesce(width)
+                     with_last_ts=True).coalesce(width),
+        eager=True,
     )
     open_rows = dim0.filter(F.col("valid_to").isNull())
     closed_pieces: list[DataFrame] = [
@@ -966,7 +963,7 @@ def x19_stream_scd2_dim(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         # ONE materialization per fold, |keys|+|delivery|-bounded;
         # coalesce (no shuffle) keeps task count at session width
-        folded, _ = _eager_checkpoint(folded.coalesce(width))
+        folded, _ = runtime.checkpoint(folded.coalesce(width), eager=True)
         open_rows = folded.filter(F.col("valid_to").isNull())
         closed_pieces.append(folded.filter(F.col("valid_to").isNotNull()))
         piece = open_rows
@@ -981,11 +978,4 @@ def x19_stream_scd2_dim(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = served[0]
     for s in served[1:]:
         out = out.unionByName(s)
-    m = jsc.getPersistentRDDs()
-    created = [
-        i for i in set(m.keySet().toArray()) - before
-        if (r := m.get(i)) is not None and r.rdd().isLocallyCheckpointed()
-    ]
-    out = out.coalesce(width).localCheckpoint()
-    _free_checkpoint(spark, created)
-    return out
+    return runtime.materialize_and_free(spark, before, out.coalesce(width))

@@ -26,6 +26,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from hfcommunity_spark import runtime
 from hfcommunity_spark.io import read_table
 from hfcommunity_spark.registry import query
 
@@ -304,10 +305,6 @@ def x20_stream_media_features(spark: SparkSession,
     serving equals a rebuild at every delivery, float features
     included (exact-integer byte sums, one final double division)."""
     from hfcommunity_spark.operators.dedup import _DELTA_SPLIT_MOD
-    from hfcommunity_spark.operators.graph import (
-        _eager_checkpoint,
-        _free_checkpoint,
-    )
 
     feats = _mm_base_features(spark, sf_dir)
     feats.count()  # force the session cache before the block diff
@@ -316,8 +313,7 @@ def x20_stream_media_features(spark: SparkSession,
         & F.col("payload").isNotNull() & (F.length("payload") > 0)
     )
 
-    jsc = spark.sparkContext._jsc
-    before = set(jsc.getPersistentRDDs().keySet().toArray())
+    before = runtime.pinned_block_ids(spark)
     served: list[DataFrame] = []
     for k in range(X20_DELIVERIES):
         batch = media.filter(
@@ -330,10 +326,11 @@ def x20_stream_media_features(spark: SparkSession,
         # stays a union of the session-cached base + prior pieces —
         # never re-materialized per fold (the round-11 lifecycle rule:
         # fold cost must not scale with the standing index)
-        new_feats, _ids = _eager_checkpoint(
+        new_feats, _ids = runtime.checkpoint(
             batch.select("media_id", "payload").mapInPandas(
                 byte_features_batches, schema=FEATURE_SCHEMA
-            )
+            ),
+            eager=True,
         )
         feats = feats.unionByName(new_feats)
         served.append(
@@ -346,14 +343,7 @@ def x20_stream_media_features(spark: SparkSession,
     out = served[0]
     for s in served[1:]:
         out = out.unionByName(s)
-    m = jsc.getPersistentRDDs()
-    created = [
-        i for i in set(m.keySet().toArray()) - before
-        if (r := m.get(i)) is not None and r.rdd().isLocallyCheckpointed()
-    ]
-    out = out.localCheckpoint()
-    _free_checkpoint(spark, created)
-    return out
+    return runtime.materialize_and_free(spark, before, out)
 
 
 FRAME_BYTES = 128  # fixed "frame" size in the byte stream

@@ -43,6 +43,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, DoubleType, LongType
 
+from hfcommunity_spark import runtime
 from hfcommunity_spark.io import read_table
 from hfcommunity_spark.registry import query
 from hfcommunity_spark.session_cache import SessionCache
@@ -1847,10 +1848,6 @@ def x16_stream_maintained_ann(spark: SparkSession,
     freed once the served union materializes."""
     import numpy as np
 
-    from hfcommunity_spark.operators.graph import (
-        materialize_and_free,
-        pinned_block_ids,
-    )
     from hfcommunity_spark.operators.kmeans import _pairwise_sq_dists
 
     emb = read_table(spark, sf_dir, "embeddings")
@@ -1883,7 +1880,7 @@ def x16_stream_maintained_ann(spark: SparkSession,
         _X16_BASE_COUNTS[ckey] = base_counts
     counts = dict(base_counts)
 
-    before = pinned_block_ids(spark)
+    before = runtime.pinned_block_ids(spark)
     # ONE arrival-tagged assignment of the whole arriving slice (the
     # x14 one-pass lesson, round 13): one GEMM + one checkpoint + one
     # (k, cell)-count collect replace three of each — every fold's
@@ -1936,7 +1933,7 @@ def x16_stream_maintained_ann(spark: SparkSession,
     # each serve reads only checkpointed pieces + the persisted base,
     # so the union materializes once here; every invocation-created
     # block (the per-delivery assigned pieces) is then freed
-    return materialize_and_free(spark, before, out)
+    return runtime.materialize_and_free(spark, before, out)
 
 
 # --- product quantization + ADC (round 14) ---------------------------

@@ -45,6 +45,22 @@ def test_cli_full_load_and_rerun(spark, feed_dir, tmp_path, capsys):
         f"{base}/repository/release=r1").count() == 3
 
 
+def test_cli_loads_write_schema_column_order(spark, feed_dir, tmp_path):
+    """The full load and the incremental merge write every table in
+    ``SCHEMAS`` field order, so a release reads the same columns in
+    the same order whichever path produced it."""
+    base = str(tmp_path / "snap_order")
+    assert cli.main(["--feeds", feed_dir, "--base", base,
+                     "--release", "r1"]) == 0
+    assert cli.main(["--feeds", feed_dir, "--base", base,
+                     "--release", "r2", "--prev-release", "r1"]) == 0
+    for release in ("r1", "r2"):
+        for name, schema in SCHEMAS.items():
+            got = spark.read.parquet(
+                f"{base}/{name}/release={release}").columns
+            assert got == schema.fieldNames(), (release, name)
+
+
 def test_cli_type_selection(spark, feed_dir, tmp_path):
     base = str(tmp_path / "snap_t")
     assert cli.main(["--feeds", feed_dir, "--base", base,

@@ -54,10 +54,7 @@ def test_scd2_fold_job_budget(spark):
     materializing the fold is a CONSTANT 3 jobs — two broadcast-probe
     builds + the eager checkpoint — independent of history depth
     (see module docstring for why not 2)."""
-    from hfcommunity_spark.operators.graph import (
-        _eager_checkpoint,
-        _free_checkpoint,
-    )
+    from hfcommunity_spark import runtime
     from hfcommunity_spark.operators.mergeops import scd2_delta_split
 
     open_rows = spark.createDataFrame(
@@ -75,13 +72,13 @@ def test_scd2_fold_job_budget(spark):
             ts="ts", tiebreak="event_id",
         )
     with _job_budget(spark, 3, "scd2-fold"):
-        folded, ids = _eager_checkpoint(parts.coalesce(2))
+        folded, ids = runtime.checkpoint(parts.coalesce(2), eager=True)
     # the fold actually folded: key 1 closed at ts 20, key 3 is fresh
     got = {(r.user_id, r.state, r.valid_from, r.valid_to)
            for r in folded.collect()}
     assert (1, "a", 10, 20) in got and (1, "b", 20, None) in got
     assert (3, "a", 21, None) in got and (2, "b", 5, None) in got
-    _free_checkpoint(spark, ids)
+    runtime.free(spark, ids)
 
 
 def test_bm25_fold_job_budget(spark):

@@ -241,40 +241,6 @@ def test_local_union_find_empty_edges(spark):
     assert out.count() == 0
 
 
-def test_eager_checkpoint_does_not_capture_lazy_caches(spark):
-    """Round-5 review: a LAZY persist() whose first materialization
-    happens inside a checkpoint job must not be captured as checkpoint
-    storage — _free_checkpoint would otherwise evict it and every
-    later probe would recompute from scratch."""
-    from hfcommunity_spark.operators.graph import (
-        _eager_checkpoint,
-        _free_checkpoint,
-    )
-
-    jsc = spark.sparkContext._jsc
-    base = set(jsc.getPersistentRDDs().keySet().toArray())
-    cached = spark.range(1000).selectExpr("id", "id * 2 AS v").persist()
-    try:
-        # not yet materialized; the checkpoint job triggers it
-        derived = cached.selectExpr("id", "v + 1 AS w")
-        ck, ids = _eager_checkpoint(derived)
-        assert ck.count() == 1000
-        assert ids, "checkpoint storage must be captured"
-        _free_checkpoint(spark, ids)
-        m = jsc.getPersistentRDDs()
-        survivors = [
-            i for i in set(m.keySet().toArray()) - base
-            if m.get(i) is not None
-            and not m.get(i).rdd().isLocallyCheckpointed()
-        ]
-        assert survivors, "lazy cache was evicted by _free_checkpoint"
-        for i in ids:  # the checkpoint blocks themselves ARE freed
-            assert m.get(i) is None or not m.get(
-                i).rdd().getStorageLevel().isValid()
-    finally:
-        cached.unpersist()
-
-
 def test_components_delta_equals_rebuild(spark):
     """Incremental CC maintenance: base + sequential edge deliveries
     through components_delta must equal the from-scratch labeling on
@@ -786,8 +752,8 @@ def test_maintained_table_under_streaming_deliveries(spark, tmp_path):
 
 
 def test_py_xxh64_matches_spark_xxhash64(spark):
-    """_xxh64_long / _py_bucket are the driver-side twins of
-    F.xxhash64 / _bucket_expr for BIGINT keys — the writers' Python
+    """xxh64_long / py_bucket are the driver-side twins of
+    F.xxhash64 / bucket_expr for BIGINT keys — the writers' Python
     fast path silently selects the WRONG partitions if they ever
     drift, so lock value parity across the int64 domain (boundaries,
     negatives, random draws)."""
@@ -795,7 +761,7 @@ def test_py_xxh64_matches_spark_xxhash64(spark):
 
     from pyspark.sql import functions as F
 
-    from hfcommunity_spark.operators.graph import _py_bucket, _xxh64_long
+    from hfcommunity_spark.runtime import py_bucket, xxh64_long
 
     rng = random.Random(0xC0FFEE)
     vals = [0, 1, -1, 42, 2**63 - 1, -(2**63), 2**62, -(2**62)] + [
@@ -808,9 +774,9 @@ def test_py_xxh64_matches_spark_xxhash64(spark):
         F.pmod(F.xxhash64("v"), F.lit(7)).cast("int").alias("b7"),
     ).collect()
     for r in got:
-        assert _xxh64_long(r.v) == r.h, r.v
-        assert _py_bucket(r.v, 64) == r.b64, r.v
-        assert _py_bucket(r.v, 7) == r.b7, r.v
+        assert xxh64_long(r.v) == r.h, r.v
+        assert py_bucket(r.v, 64) == r.b64, r.v
+        assert py_bucket(r.v, 7) == r.b7, r.v
 
 
 def test_pruned_merge_plan_local_fast_path_parity(spark, tmp_path,
@@ -865,8 +831,8 @@ def test_apply_relabel_fast_path_matches_distributed(spark, tmp_path):
     table content and return the same change set."""
     from pyspark.sql import functions as F
 
+    from hfcommunity_spark.runtime import local_frame
     from hfcommunity_spark.operators.graph import (
-        _local_frame,
         apply_relabel_in_place,
         connected_components,
         write_component_assign,
@@ -887,7 +853,7 @@ def test_apply_relabel_fast_path_matches_distributed(spark, tmp_path):
     ])
     outs, changes = [], []
     for tag, mk in (
-        ("fast", lambda rows, sch: _local_frame(spark, rows, sch)),
+        ("fast", lambda rows, sch: local_frame(spark, rows, sch)),
         ("dist", lambda rows, sch: spark.createDataFrame(rows, sch)),
     ):
         out = str(tmp_path / f"assign_{tag}")
@@ -921,8 +887,8 @@ def test_vertex_layout_local_writer_matches_distributed(spark,
     from pyspark.sql import types as T
 
     from hfcommunity_spark.operators import graph as G
+    from hfcommunity_spark.runtime import local_frame
     from hfcommunity_spark.operators.graph import (
-        _local_frame,
         apply_changes_vertex_layout,
         connected_components,
         write_vertex_assign,
@@ -939,8 +905,8 @@ def test_vertex_layout_local_writer_matches_distributed(spark,
     ])
     outs = []
     for tag, mk, cap in (
-        ("local", lambda: _local_frame(spark, ch_rows, sch), None),
-        ("capped", lambda: _local_frame(spark, ch_rows, sch), 0),
+        ("local", lambda: local_frame(spark, ch_rows, sch), None),
+        ("capped", lambda: local_frame(spark, ch_rows, sch), 0),
         ("dist", lambda: spark.createDataFrame(ch_rows, sch), None),
     ):
         out = str(tmp_path / f"vassign_{tag}")
@@ -972,8 +938,8 @@ def test_bounded_fold_schedules_zero_spark_jobs(spark, tmp_path):
     class) flips this test, not just a bench number."""
     from pyspark.sql import types as T
 
+    from hfcommunity_spark.runtime import local_frame
     from hfcommunity_spark.operators.graph import (
-        _local_frame,
         apply_changes_vertex_layout,
         apply_relabel_in_place,
         component_merge_plan_pruned,
@@ -992,7 +958,7 @@ def test_bounded_fold_schedules_zero_spark_jobs(spark, tmp_path):
         T.StructField("src", T.LongType()),
         T.StructField("dst", T.LongType()),
     ])
-    delta = _local_frame(
+    delta = local_frame(
         spark, [(9, 10), (29, 30), (5, 200001)], sch
     )
     sc = spark.sparkContext
@@ -1034,8 +1000,8 @@ def test_relabel_local_writer_cap_falls_back(spark, tmp_path):
     from pyspark.sql import types as T
 
     from hfcommunity_spark.operators import graph as G
+    from hfcommunity_spark.runtime import local_frame
     from hfcommunity_spark.operators.graph import (
-        _local_frame,
         apply_relabel_in_place,
         connected_components,
         write_component_assign,
@@ -1063,8 +1029,8 @@ def test_relabel_local_writer_cap_falls_back(spark, tmp_path):
         try:
             ch = apply_relabel_in_place(
                 spark, out,
-                _local_frame(spark, rel_rows, rsch), buckets=8,
-                fresh=_local_frame(spark, fresh_rows, sch2),
+                local_frame(spark, rel_rows, rsch), buckets=8,
+                fresh=local_frame(spark, fresh_rows, sch2),
                 return_changes=True,
             )
         finally:
@@ -1197,7 +1163,7 @@ def test_local_bucket_rows_corrupt_file_gates_to_none(tmp_path):
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    from hfcommunity_spark.operators.graph import _local_bucket_rows
+    from hfcommunity_spark.runtime import read_bucket_rows
 
     d = tmp_path / "layout" / "c_bucket=3"
     d.mkdir(parents=True)
@@ -1209,60 +1175,16 @@ def test_local_bucket_rows_corrupt_file_gates_to_none(tmp_path):
         str(d / "part-00000-ok.snappy.parquet"),
     )
     # healthy layout reads fine
-    got = _local_bucket_rows(str(tmp_path / "layout"), "c_bucket", [3])
+    cols = ("vertex", "component")
+    got = read_bucket_rows(
+        str(tmp_path / "layout"), "c_bucket", [3], cols, 10_000
+    )
     assert got == {3: [(1, 1), (2, 1)]}
     # truncated footer → ArrowInvalid → gate, not crash
     (d / "part-00001-bad.snappy.parquet").write_bytes(b"PAR1junk")
-    assert _local_bucket_rows(
-        str(tmp_path / "layout"), "c_bucket", [3]
+    assert read_bucket_rows(
+        str(tmp_path / "layout"), "c_bucket", [3], cols, 10_000
     ) is None
-
-
-def test_local_bucket_write_stages_before_unlink(tmp_path,
-                                                 monkeypatch):
-    """Durability contract of the driver-local writer (round-11
-    advice): the replacement file is written while the old files are
-    still on disk, and old files are only unlinked after the write
-    succeeds — so a failed write leaves the bucket's previous
-    contents fully intact (never an emptied directory)."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    from hfcommunity_spark.operators import graph as G
-
-    d = tmp_path / "layout" / "c_bucket=5"
-    d.mkdir(parents=True)
-    pq.write_table(
-        pa.table({
-            "vertex": pa.array([7], pa.int64()),
-            "component": pa.array([7], pa.int64()),
-        }),
-        str(d / "part-00000-old.snappy.parquet"),
-    )
-
-    def boom(*a, **k):
-        raise OSError("disk full")
-
-    monkeypatch.setattr(pq, "write_table", boom)
-    try:
-        G._local_bucket_write(
-            str(tmp_path / "layout"), "c_bucket",
-            {5: [(7, 9), (8, 9)]}, (),
-        )
-    except OSError:
-        pass
-    else:  # pragma: no cover - the stub always raises
-        raise AssertionError("write failure must propagate")
-    monkeypatch.undo()
-    # old contents untouched and readable
-    got = G._local_bucket_rows(str(tmp_path / "layout"), "c_bucket", [5])
-    assert got == {5: [(7, 7)]}
-    # and a SUCCESSFUL rewrite replaces them exactly (no stale files)
-    G._local_bucket_write(
-        str(tmp_path / "layout"), "c_bucket", {5: [(7, 9), (8, 9)]}, ()
-    )
-    got = G._local_bucket_rows(str(tmp_path / "layout"), "c_bucket", [5])
-    assert got == {5: [(7, 9), (8, 9)]}
 
 
 def test_ancestors_local_twin_matches_distributed(spark):

@@ -121,7 +121,7 @@ def main() -> None:
                 " (the _span_fold_distributed toArrow frame) ==\n"
             )
             parts.append(_explain(pre))
-            from hfcommunity_spark.operators.graph import _bucket_expr
+            from hfcommunity_spark.runtime import bucket_expr
             batch_rel = spark.createDataFrame(_pa.table({
                 "doc_id": _pa.array([1], _pa.int64()),
                 "n_spans": _pa.array([1], _pa.int64()),
@@ -145,8 +145,8 @@ def main() -> None:
                 )
                 .unionByName(batch_rel)
                 .withColumn("d_bucket",
-                            _bucket_expr("doc_id",
-                                         dd.SPAN_STATS_BUCKETS))
+                            bucket_expr("doc_id",
+                                        dd.SPAN_STATS_BUCKETS))
             )
             parts.append(
                 "\n== internal (r15): snapshot-read stats-upsert write"

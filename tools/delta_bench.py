@@ -50,6 +50,7 @@ def main() -> None:
         components_delta,
         connected_components,
     )
+    from hfcommunity_spark.runtime import link_or_copy
     from hfcommunity_spark.session import get_spark
 
     spark = get_spark(app_name="hfcommunity-delta-bench")
@@ -163,20 +164,14 @@ def main() -> None:
         dd.write_span_stats(stats, sstats_dir, buckets=fold_sbkts)
         fold_work: dict = {"d": None}
 
-        def _link_or_copy(src, dst):
-            try:
-                os.link(src, dst)
-            except OSError:
-                shutil.copy2(src, dst)
-
         def _fold_setup():
             if fold_work["d"]:
                 shutil.rmtree(fold_work["d"], ignore_errors=True)
             w = tempfile.mkdtemp(prefix=f"hfc_db_fold_{label}_")
             shutil.copytree(fold_span_dir, os.path.join(w, "postings"),
-                            copy_function=_link_or_copy)
+                            copy_function=link_or_copy)
             shutil.copytree(sstats_dir, os.path.join(w, "stats"),
-                            copy_function=_link_or_copy)
+                            copy_function=link_or_copy)
             fold_work["d"] = w
 
         def _fold_delta():

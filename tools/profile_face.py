@@ -58,10 +58,12 @@ def main() -> None:
     tally: dict = defaultdict(lambda: [0.0, 0])
     _wrap("hfcommunity_spark.operators.graph", [
         "component_merge_plan_pruned", "apply_relabel_in_place",
-        "apply_changes_vertex_layout", "_sync_catalog_partitions",
-        "materialize_and_free", "_eager_checkpoint",
-        "_quotient_relabel", "resolve_assign_pruned",
-        "write_component_assign", "write_vertex_assign",
+        "apply_changes_vertex_layout", "_quotient_relabel",
+        "resolve_assign_pruned", "write_component_assign",
+        "write_vertex_assign",
+    ], tally)
+    _wrap("hfcommunity_spark.runtime", [
+        "sync_catalog_partitions", "materialize_and_free", "checkpoint",
     ], tally)
     _wrap("hfcommunity_spark.operators.dedup", [
         "span_fold_in_place", "span_index_delta_bucketed",
