@@ -360,3 +360,21 @@ def test_band_probes_ride_both_payloads_and_fit_budget():
     assert "calibration_bands" not in full2
     assert "bands" not in json.loads(line2)
     assert "queries_band_norm_vals" not in json.loads(line2)
+
+
+def test_band_norm_follows_the_timed_order():
+    """Queries are banded in the order the timed pass ran them, not
+    re-sorted by name: with names timed in reverse alphabetical order,
+    the first BAND_SIZE timed queries normalize by the first band's
+    probes."""
+    from bench import BAND_SIZE, _band_norm
+
+    names = [f"q{i:03d}" for i in range(2 * BAND_SIZE)][::-1]
+    timings = {n: 1.0 for n in names}
+    probes = [{"cpu": 0.3, "scan": 0.1}, {"cpu": 0.3, "scan": 0.1},
+              {"cpu": 0.3, "scan": 0.5}]
+    norm = _band_norm(timings, probes)
+    for n in names[:BAND_SIZE]:
+        assert norm[n] == round(1.0 / 0.1, 3), n
+    for n in names[BAND_SIZE:]:
+        assert norm[n] == round(1.0 / 0.3, 3), n

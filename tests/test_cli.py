@@ -5,8 +5,10 @@ the watermark-incremental repository load."""
 from __future__ import annotations
 
 import json
+import threading
 
 import pytest
+from pyspark.util import inheritable_thread_target
 
 from hfcommunity_spark import cli
 from hfcommunity_spark.schema import SCHEMAS
@@ -416,3 +418,115 @@ def test_cli_query_mode_runs_declared_inventory(spark, capsys):
     # since round 10 (the k-means ANN gained its unrolled-Lloyd
     # oracle) EVERY declared query is oracle-equipped
     assert "rows-only" not in listing
+
+
+# A load of the fixture feeds takes seconds; one that waits forever on
+# a table count fails the test instead of stalling the suite.
+LOAD_TIMEOUT_S = 300
+
+
+def _load(spark, feed_dir, base, release, *extra):
+    """``cli.run`` on a helper thread that inherits the caller's job
+    group, joined with a timeout.  Returns the counts or re-raises."""
+    args = cli._parser().parse_args(
+        ["--feeds", feed_dir, "--base", base, "--release", release,
+         *extra])
+    out = {}
+
+    def target():
+        try:
+            out["counts"] = cli.run(spark, args)
+        except Exception as e:  # handed to the caller's thread
+            out["error"] = e
+
+    t = threading.Thread(target=inheritable_thread_target(spark)(target),
+                         daemon=True)
+    t.start()
+    t.join(LOAD_TIMEOUT_S)
+    assert not t.is_alive(), f"cli.run still running after {LOAD_TIMEOUT_S}s"
+    if "error" in out:
+        raise out["error"]
+    return out["counts"]
+
+
+@pytest.mark.parametrize("load", ["full", "incremental", "model"])
+def test_cli_counts_come_from_the_write(spark, feed_dir, tmp_path, load):
+    """``cli.run`` reports each table's row count from an observed
+    metric of the table's own write.  The reported counts equal a
+    read-back count of every snapshot, including the empty ones the
+    ``-i`` and ``-t model`` loads write (an observation that never
+    fired would hang here instead)."""
+    base = str(tmp_path / "snap_counts")
+    if load == "incremental":
+        _load(spark, feed_dir, base, "r1")
+        # every feed repo is older than the 1-month watermark: most
+        # of the new release's inputs are empty relations
+        counts = _load(spark, feed_dir, base, "r2",
+                       "--prev-release", "r1", "-i", "1")
+        release = "r2"
+    else:
+        extra = ("-t", "model") if load == "model" else ()
+        counts = _load(spark, feed_dir, base, "r1", *extra)
+        release = "r1"
+    assert list(counts) == list(SCHEMAS)
+    assert counts == {
+        name: spark.read.parquet(
+            f"{base}/{name}/release={release}").count()
+        for name in SCHEMAS
+    }
+    if load == "model":
+        assert counts["dataset"] == counts["space"] == 0
+
+
+# Spark jobs of a full load of the ``feed_dir`` fixture: two per table
+# write.  Reading each table back to count it cost 3 more per table.
+LOAD_JOB_BUDGET = 34
+
+
+def test_cli_load_job_budget_and_group(spark, feed_dir, tmp_path):
+    """A full load schedules at most LOAD_JOB_BUDGET jobs, and every
+    job started during the call carries the caller's job group, also
+    those the concurrent table writers start.  Jobs started are
+    counted by job id, which Spark assigns in sequence: the size of
+    the status store's job list stops growing at
+    ``spark.ui.retainedJobs``."""
+    sc = spark.sparkContext
+    store = sc._jsc.sc().statusStore()
+
+    def last_job_id() -> int:
+        sc._jsc.sc().listenerBus().waitUntilEmpty(30_000)
+        jobs = store.jobsList(None)  # newest first
+        return jobs.head().jobId() if jobs.size() else -1
+
+    group = "hfc-job-budget-cli-load"
+    before = last_job_id()
+    sc.setJobGroup(group, "cli load")
+    try:
+        _load(spark, feed_dir, str(tmp_path / "snap_jobs"), "r1")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    started = last_job_id() - before
+    grouped = sc.statusTracker().getJobIdsForGroup(group)
+    assert 0 < len(grouped) <= LOAD_JOB_BUDGET, sorted(grouped)
+    assert len(grouped) == started, (len(grouped), started)
+
+
+def test_cli_failed_write_raises_after_the_others(
+    spark, feed_dir, tmp_path, monkeypatch
+):
+    """A failing table write is re-raised by ``cli.run`` once every
+    other table's write has finished; no counts are returned."""
+    written = []
+    real = cli.write_snapshot
+
+    def flaky(df, base, name, release):
+        if name == "author":
+            raise RuntimeError("disk full")
+        out = real(df, base, name, release)
+        written.append(name)
+        return out
+
+    monkeypatch.setattr(cli, "write_snapshot", flaky)
+    with pytest.raises(RuntimeError, match="disk full"):
+        _load(spark, feed_dir, str(tmp_path / "snap_fail"), "r1")
+    assert sorted(written) == sorted(set(SCHEMAS) - {"author"})

@@ -16,7 +16,10 @@ this measures the ENGINE (parse → normalize → merge → snapshot), i.e.
 the part the reference spends on single-threaded Python + MariaDB
 inserts.  It is the bound a cluster deployment actually controls.
 
-Usage: python tools/etl_bench.py [--repos N] [--out ETL_BENCH.json]
+The payload records the cores the session ran on
+(``$SPARK_GRAFT_CPUS``) and the git SHA of the measured code.
+
+Usage: python tools/etl_bench.py [--repos N] [--series] [--out ETL_BENCH.json]
 """
 
 from __future__ import annotations
@@ -26,11 +29,13 @@ import json
 import os
 import random
 import shutil
+import subprocess
 import sys
 import tempfile
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 # June-2024 corpus shape (BASELINE.md, docs/download.html):
 REF_ROWS_TOTAL = 122_195_998
@@ -133,6 +138,20 @@ def _write_feeds(d: str, n_repos: int, seed: int = 11) -> None:
         f.close()
 
 
+def _git_sha() -> str | None:
+    """HEAD of this checkout, suffixed ``-dirty`` when the engine or
+    tool sources differ from it; None outside a git work tree."""
+    git = ["git", "-C", ROOT]
+    try:
+        head = subprocess.run([*git, "rev-parse", "HEAD"], check=True,
+                              capture_output=True, text=True).stdout
+        dirty = subprocess.run([*git, "diff", "--quiet", "HEAD", "--",
+                                "hfcommunity_spark", "tools"]).returncode
+    except (OSError, subprocess.CalledProcessError):
+        return None
+    return head.strip() + ("-dirty" if dirty else "")
+
+
 def _one_scale(spark, work: str, n_repos: int) -> dict:
     from hfcommunity_spark import cli
 
@@ -166,13 +185,12 @@ def main() -> None:
                     help="weak-scaling sweep: repos/10, repos, repos*3 "
                          "— shows the fixed per-run overhead amortize "
                          "(throughput must NOT degrade with size)")
-    ap.add_argument("--out", default=os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-        "ETL_BENCH.json"))
+    ap.add_argument("--out", default=os.path.join(ROOT, "ETL_BENCH.json"))
     args = ap.parse_args()
+    sha = _git_sha()
 
     work = tempfile.mkdtemp(prefix="etl_bench_")
-    from hfcommunity_spark.session import get_spark
+    from hfcommunity_spark.session import default_parallelism, get_spark
 
     spark = get_spark(app_name="hfcommunity-etl-bench")
     spark.sparkContext.setLogLevel("ERROR")
@@ -195,6 +213,8 @@ def main() -> None:
             "wall_hours": REF_HOURS,
             "rows_per_sec": round(REF_ROWS_TOTAL / (REF_HOURS * 3600), 1),
         },
+        "cores": default_parallelism(),
+        "git_sha": sha,
         "extrapolated_hours_at_ref_cardinality": round(
             REF_ROWS_TOTAL / rps / 3600, 2
         ),
